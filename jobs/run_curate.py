@@ -12,6 +12,8 @@ spark-submit.
         --ttr-ratio 45                 # domain-blocklist TTR threshold (1/45)
         --shards 64                    # publication shard count
 
+``mats.zip`` is packaged as in ``jobs/run_transform.py``.
+
 Stages (each optional, composable, all shuffle-shapes documented at
 their operator sites):
 

@@ -8,6 +8,8 @@ boilerplate-strip family) via spark-submit.
         --spans                         # also write per-block span rows
         --stream                        # incremental: process only new files, exactly-once
 
+``mats.zip`` is packaged as in ``jobs/run_transform.py``.
+
 Batch mode writes ``out/main_content`` (url, main_text, n_blocks,
 n_kept); ``--spans`` adds ``out/content_spans``.  ``--stream`` runs the
 same extraction as a native Structured-Streaming transform with an

@@ -7,7 +7,8 @@
         --dedup content_hash --skip-all-errors \
         --shards 4096 --run-date 20260816 --run-time 000000
 
-Packaging: ``cd repo && zip -r mats.zip markdown_articles_tool_spark``.
+Packaging: ``cd repo && zip -r mats.zip markdown_articles_tool_spark pyspark_graft_worker.py``
+(the Python worker entry; README "Session notes" says when it is used).
 All wall-clock template variables are pinned job params (determinism /
 resume, article_processor.py:77-79 note in SURVEY.md §4).
 """

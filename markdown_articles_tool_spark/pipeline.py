@@ -237,11 +237,7 @@ def extract_pass_links(
     # second materialization point: the dedup-winners branch and the
     # main branch both consume the joined+derived links — without this,
     # the meta join and its upstream UDFs execute once per branch
-    import os as _os
-
-    links = links.select(*LINKMETA_COLS)
-    if _os.environ.get('SPARK_GRAFT_NO_LINKMETA_PERSIST', '0') != '1':
-        links = links.persist()
+    links = links.select(*LINKMETA_COLS).persist()
     return links, fetched, (links_pre, links, fetched)
 
 

@@ -135,7 +135,10 @@ def _pagerank_partition(batches, iterations: int):
     for _ in range(iterations):
         in_units = dict.fromkeys(hosts, 0)
         for s, d, w in elist:
-            in_units[d] += rank[s] * w // out_w[s]
+            # a source whose out-weights sum to 0 contributes nothing:
+            # the SQL loop's NULLIF(out_w, 0) gives a NULL that sum skips
+            if out_w[s]:
+                in_units[d] += rank[s] * w // out_w[s]
         dang = sum(rank[h] for h in dangling) // n
         rank = {h: (15 * base + 85 * (in_units[h] + dang)) // 100 for h in hosts}
     yield pd.DataFrame({'host': list(rank.keys()),
@@ -235,7 +238,7 @@ def pagerank_hosts(edges: DataFrame, iterations: int = 10,
             .select(
                 F.col('dst_host').alias('host'),
                 F.expr(
-                    'CAST((CAST(rank_units AS DECIMAL(38,0)) * n_links) DIV out_w AS LONG)'
+                    'CAST((CAST(rank_units AS DECIMAL(38,0)) * n_links) DIV NULLIF(out_w, 0) AS LONG)'
                 ).alias('contrib'),
             )
             .groupBy('host')

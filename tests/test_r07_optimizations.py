@@ -147,6 +147,38 @@ class TestCdxDomainBoundary:
         assert got_host == ['example,site1)/a'], got_host
 
 
+class TestCdxShardRowsClamp:
+    """``SPARK_GRAFT_CDX_SHARD_ROWS`` of 0 or below is clamped to 1 row
+    per shard instead of dividing by zero (or giving a negative shard
+    count) at the first default-sharded write."""
+
+    @pytest.mark.parametrize('value', ['0', '-1'])
+    def test_non_positive_rows_per_shard(self, spark, tmp_path, monkeypatch, value):
+        import importlib
+
+        from markdown_articles_tool_spark.sources import cdxindex
+
+        cdx = spark.createDataFrame(
+            [('a.warc.gz', i, 'response', f'https://h.example/{i}',
+              f'example,h)/{i}', 0, 10, True, '2020-09-13T12:26:40Z') for i in range(3)],
+            'file_name string, ord int, warc_type string, url string, '
+            'surt string, offset long, length long, addressable boolean, '
+            'warc_date string',
+        )
+        monkeypatch.setenv('SPARK_GRAFT_CDX_SHARD_ROWS', value)
+        try:
+            importlib.reload(cdxindex)
+            assert cdxindex._TARGET_ROWS_PER_SHARD == 1
+            path = str(tmp_path / 'index')
+            cdxindex.write_cdx_index(cdx, path)
+            # one row per shard, capped at the cluster parallelism
+            shards = spark.read.parquet(f'{path}/_boundaries').count()
+            assert shards == min(3, spark.sparkContext.defaultParallelism)
+        finally:
+            monkeypatch.delenv('SPARK_GRAFT_CDX_SHARD_ROWS')
+            importlib.reload(cdxindex)
+
+
 class TestClosestDateEdgeCases:
     def _index(self, spark, tmp_path_factory, dates):
         from markdown_articles_tool_spark.sources.cdxindex import write_cdx_index
@@ -220,6 +252,39 @@ class TestPagerankSingleTaskFastPath:
                     for r in pagerank_hosts(df, iterations=6,
                                             local_max_edges=0).collect()}
             assert fast == slow
+
+    def test_zero_out_weight_source_matches_distributed_loop(self, spark):
+        """A source whose out-weights sum to 0 contributes nothing on
+        either path (the kernel once raised ZeroDivisionError, the SQL
+        loop DIVIDE_BY_ZERO under ANSI); both also match the sequential
+        twin."""
+        import os
+        import random
+        import sys
+
+        sys.path.insert(0, os.path.join(os.path.dirname(__file__), '..', 'tools'))
+        from oracle_kernels import pagerank_seq
+
+        from markdown_articles_tool_spark.training.linkgraph import pagerank_hosts
+
+        rng = random.Random(4321)
+        for _ in range(3):
+            hosts = [f'h{i}.example' for i in range(rng.randint(3, 20))]
+            pairs = set()
+            for _e in range(rng.randint(2, 50)):
+                pairs.add(tuple(rng.sample(hosts, 2)))
+            # zero_src: every out-edge weighs 0; others: some 0-weight edges
+            zero_src = rng.choice(sorted({s for s, _ in pairs}))
+            rows = [(s, d, 0 if s == zero_src else rng.choice([0, 1, 2, 5]))
+                    for (s, d) in sorted(pairs)]
+            df = spark.createDataFrame(
+                rows, 'src_host string, dst_host string, n_links long')
+            fast = {r['host']: r['rank_units']
+                    for r in pagerank_hosts(df, iterations=5).collect()}
+            slow = {r['host']: r['rank_units']
+                    for r in pagerank_hosts(df, iterations=5,
+                                            local_max_edges=0).collect()}
+            assert fast == slow == pagerank_seq(rows, iterations=5)
 
     def test_fast_path_runs_zero_iteration_jobs(self, spark):
         """The fast path's plan is one exchange + one mapInPandas —

@@ -1816,7 +1816,8 @@ def pagerank_seq(edges, iterations: int = 10) -> dict:
     for _ in range(iterations):
         inc = {h: 0 for h in nodes}
         for s, d, w in elist:
-            inc[d] += rank[s] * w // outw[s]
+            if outw[s]:  # zero total out-weight: no contribution
+                inc[d] += rank[s] * w // outw[s]
         dang = sum(rank[h] for h in nodes if h not in outw) // n
         rank = {h: (15 * base + 85 * (inc[h] + dang)) // 100 for h in nodes}
     return rank
