@@ -441,7 +441,7 @@ def q_frontier_bloom(spark, sf_dir):
 def q_warc_main_content(spark, sf_dir):
     """Crawl archive → training text end-to-end: WARC response read,
     the fetch-policy gate (HTTP 200 + text/html), then the main-content
-    boilerplate strip — two chained mapInPandas stages, zero shuffles
+    boilerplate strip — all in ONE mapInPandas pass, zero shuffles
     (sources/warc.warc_main_content)."""
     from markdown_articles_tool_spark.corpus import warc_files_df
     from markdown_articles_tool_spark.sources.warc import warc_main_content
@@ -1211,8 +1211,11 @@ def q_warc_clean(spark, sf_dir):
     """The END-TO-END release run over raw archives in ONE plan: WARC
     record walk → HTTP 200 + text/html fetch-policy gate →
     main-content boilerplate strip → mojibake repair → PII scrub →
-    Gopher keep verdict.  Four chained Arrow stages with JVM Column
-    algebra between them and ZERO shuffles — raw crawl bytes to
+    Gopher keep verdict.  Two Python crossings — one mapInPandas (record
+    walk + gate + strip, sources/warc.warc_main_content) and one fused
+    Arrow eval (mojibake → PII → sha → repetition signals,
+    training/hygiene.scrub) with the Gopher token features as JVM
+    Column algebra — and ZERO shuffles: raw crawl bytes to
     training-ready verdicts without a single exchange, the shape a
     10^12-page release run wants.  Oracle: the clean text comes from
     the chained independent twins (warc walk → main-content kernel →
@@ -1233,7 +1236,8 @@ def q_warc_host_quality(spark, sf_dir):
     per-host keep-rate over the end-to-end archive release run
     (warc_clean's verdicts), flagged ``low_quality`` by the integer
     majority rule 2*n_keep < n_pages.  Host-sized aggregation with
-    map-side partials over the zero-shuffle release-run plan; this dim
+    map-side partials over the zero-shuffle release-run plan (two
+    Python crossings, as in warc_clean); this dim
     is what next month's crawl budget and blocklist read.  Oracle =
     DuckDB aggregating its own warc_clean reconstruction per host."""
     from markdown_articles_tool_spark.corpus import warc_files_df
@@ -1297,10 +1301,10 @@ def q_cdx_closest(spark, sf_dir):
 def q_clean_corpus(spark, sf_dir):
     """The composed hygiene pipeline — what a release run actually
     executes: mojibake repair → PII scrub → Gopher quality verdict,
-    ALL in one plan with exactly three Arrow passes and ZERO shuffles
-    (each stage consumes the previous stage's output column in the
-    same projection chain; `carry=` threads the pii counts and clean
-    sha through the quality stage instead of a join).  Oracle: the
+    ALL in one plan with exactly ONE Arrow pass and ZERO shuffles (the
+    repair, scrub, clean sha and repetition signals share one
+    per-document Python kernel; the token features are Column algebra
+    over its clean text in the same projection — no join).  Oracle: the
     clean text is produced by the CHAINED independent twins
     (mojibake_fix_seq → pii_redact_seq) into oracleref, and the
     quality verdict over it is DuckDB's own SQL (the token/repetition
@@ -2366,7 +2370,7 @@ def oracle_sql() -> dict[str, str]:
     """
     # composite Gopher filter: REUSES the token_stats and
     # repetition_stats twins verbatim as CTEs (thresholds must equal
-    # textstats.gopher_filter's defaults — pinned by the driver gate)
+    # textstats.gopher_flags' defaults — pinned by tests/test_entry_oracle.py)
     d['quality_filter'] = f"""
         WITH ts AS ({d['token_stats']}), rs AS ({d['repetition_stats']})
         SELECT ts.doc_id,

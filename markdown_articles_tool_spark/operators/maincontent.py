@@ -23,10 +23,17 @@ from pyspark.sql import DataFrame
 from ..core import maincontent as mc
 
 MAIN_CONTENT_SCHEMA = 'url string, main_text string, n_blocks int, n_kept int'
+MAIN_CONTENT_COLUMNS = ['url', 'main_text', 'n_blocks', 'n_kept']
 SPANS_SCHEMA = (
     'url string, ord int, tag string, n_chars int, link_density double, '
     'kept boolean, start long, end long'
 )
+
+
+def main_content_row(url: str, html: bytes) -> tuple:
+    """One page → (url, main_text, n_blocks, n_kept)."""
+    blocks = mc.extract_blocks(html)
+    return url, mc.main_text(blocks), len(blocks), sum(1 for b in blocks if b.kept)
 
 
 def extract_main_content(pages: DataFrame, url_col: str = 'url', html_col: str = 'html') -> DataFrame:
@@ -34,13 +41,8 @@ def extract_main_content(pages: DataFrame, url_col: str = 'url', html_col: str =
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                blocks = mc.extract_blocks(html)
-                rows.append(
-                    (url, mc.main_text(blocks), len(blocks), sum(1 for b in blocks if b.kept))
-                )
-            yield pd.DataFrame(rows, columns=['url', 'main_text', 'n_blocks', 'n_kept'])
+            rows = [main_content_row(url, html) for url, html in zip(pdf[url_col], pdf[html_col])]
+            yield pd.DataFrame(rows, columns=MAIN_CONTENT_COLUMNS)
 
     return pages.select(url_col, html_col).mapInPandas(run, schema=MAIN_CONTENT_SCHEMA)
 

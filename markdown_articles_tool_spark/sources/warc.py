@@ -62,6 +62,16 @@ def read_warc_responses(files: DataFrame, file_col: str = 'file_name',
     return files.select(file_col, data_col).mapInPandas(run, schema=WARC_RESPONSES_SCHEMA)
 
 
+def iter_html_pages(data: bytes) -> Iterator[tuple]:
+    """(url, warc_date, html) of every response record of one archive
+    blob that passes the fetch-policy gate (HTTP 200 + ``text/html``),
+    html as the page's UTF-8 bytes — the one gate every text
+    derivative (main content, WET) applies."""
+    for (_ord, url, wdate, status, mime, _cs, _nb, text) in warc_responses(data):
+        if status == 200 and mime == 'text/html':
+            yield url, wdate, text.encode('utf-8')
+
+
 WARC_REVISITS_SCHEMA = (
     'file_name string, rec_ord int, url string, warc_date string, '
     'profile string, refers_to_uri string, refers_to_date string, '
@@ -288,19 +298,16 @@ def warc_to_wet(files: DataFrame, file_col: str = 'file_name',
     strip, and the from-scratch WET write (core/warc.build_wet) all in
     ONE mapInPandas pass — no shuffle, the input file is the natural
     output unit exactly as in the Common-Crawl WET layout (the WET
-    file mirrors its WARC file record-for-record)."""
+    file mirrors its WARC file record-for-record; the gate is
+    ``iter_html_pages``, shared with ``warc_main_content``)."""
     from ..core import maincontent as mc
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for fname, data in zip(pdf[file_col], pdf[data_col]):
-                entries = []
-                for (_ord, url, wdate, status, mime, _cs, _nb, text) in (
-                        warc_responses(bytes(data))):
-                    if status == 200 and mime == 'text/html':
-                        blocks = mc.extract_blocks(text.encode('utf-8'))
-                        entries.append((url, wdate, mc.main_text(blocks)))
+                entries = [(url, wdate, mc.main_text(mc.extract_blocks(html)))
+                           for url, wdate, html in iter_html_pages(bytes(data))]
                 wet_name = fname.rsplit('.warc', 1)[0] + '.warc.wet.gz'
                 rows.append((wet_name, build_wet(entries), len(entries)))
             yield pd.DataFrame(rows, columns=['file_name', 'wet', 'n_records'])
@@ -432,17 +439,24 @@ def read_wat_records(wat_files: DataFrame, file_col: str = 'file_name',
 
 def warc_main_content(files: DataFrame, file_col: str = 'file_name',
                       data_col: str = 'data') -> DataFrame:
-    """Crawl archive → training text in one plan: WARC read, the
-    fetch-policy gate (HTTP 200 + ``text/html`` only), then the
+    """Crawl archive → training text (url, main_text, n_blocks, n_kept)
+    in ONE mapInPandas pass: the WARC record walk, the fetch-policy
+    gate (HTTP 200 + ``text/html`` only, ``iter_html_pages``) and the
     main-content boilerplate strip (operators/maincontent.py) over the
-    charset-normalized page bytes.  Two chained mapInPandas stages with
-    a JVM Column filter/encode between them — still zero Exchanges:
-    the narrow gate runs where the record was parsed, and only kept
-    pages pay the extraction parse."""
-    from ..operators.maincontent import extract_main_content
+    page's UTF-8 bytes, all inside one Python worker.  Only the archive
+    blob crosses into Python and only the narrow main-content rows come
+    back: the text of non-HTML and non-200 records never reaches the
+    JVM.  Zero Exchanges; parallelism = input files, as for
+    ``read_warc_responses``.  ``file_col`` is accepted for signature
+    parity with the other readers; the output does not carry it."""
+    from ..operators.maincontent import (
+        MAIN_CONTENT_COLUMNS, MAIN_CONTENT_SCHEMA, main_content_row)
 
-    resp = read_warc_responses(files, file_col, data_col)
-    pages = resp.filter(
-        (F.col('http_status') == 200) & (F.col('mime') == 'text/html')
-    ).select('url', F.encode('text', 'utf-8').alias('html'))
-    return extract_main_content(pages)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [main_content_row(url, html)
+                    for data in pdf[data_col]
+                    for url, _wdate, html in iter_html_pages(bytes(data))]
+            yield pd.DataFrame(rows, columns=MAIN_CONTENT_COLUMNS)
+
+    return files.select(data_col).mapInPandas(run, schema=MAIN_CONTENT_SCHEMA)

@@ -218,9 +218,9 @@ def start_incremental_scrub(
     """Streaming corpus hygiene over the landing pages directory: each
     newly-landed file's documents get mojibake repair → PII scrub →
     the Gopher keep verdict, exactly once, with the scrubbed text in
-    the output row (the release-run shape).  Every stage is a
-    stateless projection (three Arrow passes, Column algebra), so the
-    whole chain runs as a NATIVE streaming transform — no state store,
+    the output row (the release-run shape).  The chain is one
+    stateless projection (one fused Arrow pass plus Column algebra),
+    so it runs as a NATIVE streaming transform — no state store,
     no shuffle, no batch bridge; the identical single-scan plan as the
     batch ``training/hygiene.scrub``."""
     from ..training.hygiene import scrub

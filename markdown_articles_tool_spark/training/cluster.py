@@ -136,6 +136,10 @@ def connected_components(
     # narrow pair rows first so an expensive pair producer (LSH
     # candidates + Jaccard verify) runs once, not once per direction
     pairs = pairs.select(F.col(a_col).alias('u'), F.col(b_col).alias('v')).persist()
+    # one label row per node id on both paths: the single-task kernel
+    # keys its labels by id, so a duplicated id row would otherwise
+    # yield one output row there and one per duplicate in the round loop
+    nodes_u = nodes.select(F.col(id_col).alias('u')).distinct()
 
     # Size-adaptive fast path (same move as linkgraph.pagerank_hosts):
     # when both the pair table and the node set fit one task, run the
@@ -147,7 +151,6 @@ def connected_components(
     # reads the materialized checkpoint.
     limit_e = _CC_LOCAL_MAX_EDGES if local_max_edges is None else int(local_max_edges)
     if pairs.count() <= limit_e:
-        nodes_u = nodes.select(F.col(id_col).alias('u'))
         if nodes_u.count() <= _CC_LOCAL_MAX_NODES:
             from pyspark.sql.types import LongType, StructField, StructType
 
@@ -176,7 +179,7 @@ def connected_components(
                 F.col('u').alias(id_col), F.col('label').alias('cluster_rep'))
 
     edges = pairs.unionByName(pairs.select(F.col('v').alias('u'), F.col('u').alias('v'))).persist()
-    labels = nodes.select(F.col(id_col).alias('u'), F.col(id_col).alias('label'))
+    labels = nodes_u.select('u', F.col('u').alias('label'))
     labels = labels.localCheckpoint(eager=True)
 
     converged = False

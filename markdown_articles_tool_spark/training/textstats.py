@@ -7,8 +7,13 @@ path) — each has an exact ANSI-SQL twin in ``__spark_entry__.oracle_sql``.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 # BPE-ish token regex: word runs OR single non-space punctuation
 BPE_TOKEN_RE = r'[A-Za-z0-9_]+|[^A-Za-z0-9_\s]'
@@ -93,51 +98,51 @@ def _lang_rank(lang: str) -> int:
     return {c: i for i, c in enumerate(sorted(LANG_MARKERS, reverse=True))}[lang]
 
 
+REP_SCHEMA = StructType([
+    StructField('n_lines', IntegerType()),
+    StructField('dup_line_frac', DoubleType()),
+    StructField('dup_line_char_frac', DoubleType()),
+    StructField('top_bigram_frac', DoubleType()),
+])
+
+_ws_split = re.compile(r'[ \t\n\r\f\v]+').split
+
+
+def repetition_signals(text):
+    """(n_lines, dup_line_frac, dup_line_char_frac, top_bigram_frac)
+    of one document (spec in ``repetition_stats``); ``None`` reads as
+    the empty document."""
+    t = text or ''
+    lines = [x for x in (s.strip(' \t\r\v\f') for s in t.split('\n')) if x]
+    n = len(lines)
+    if n:
+        counts = Counter(lines)
+        dup_line = (n - len(counts)) / n
+        total_chars = sum(len(x) for x in lines)
+        dup_chars = sum(len(x) * c for x, c in counts.items() if c > 1)
+        dup_char_frac = dup_chars / total_chars if total_chars else 0.0
+    else:
+        dup_line, dup_char_frac = 0.0, 0.0
+    words = [w for w in _ws_split(t) if w]
+    if len(words) >= 2:
+        # NUL-joined (not tuples): matches the oracle's string
+        # gram key exactly, incl. pathological NUL-bearing words
+        grams = Counter(a + '\0' + b for a, b in zip(words, words[1:]))
+        top_bigram = max(grams.values()) / (len(words) - 1)
+    else:
+        top_bigram = 0.0
+    return n, round(dup_line, 6), round(dup_char_frac, 6), round(top_bigram, 6)
+
+
 def _make_rep_udf():
     """The repetition-signals Arrow kernel, shared by repetition_stats
     and gopher_filter (ONE scan each — the filter must not rescan the
     corpus to reuse these signals)."""
-    from collections import Counter
-
     from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-    schema = StructType([
-        StructField('n_lines', IntegerType()),
-        StructField('dup_line_frac', DoubleType()),
-        StructField('dup_line_char_frac', DoubleType()),
-        StructField('top_bigram_frac', DoubleType()),
-    ])
-
-    import re as _re
-
-    ws_split = _re.compile(r'[ \t\n\r\f\v]+').split
-
-    @pandas_udf(schema)
+    @pandas_udf(REP_SCHEMA)
     def rep_udf(text: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in text:
-            lines = [x for x in (s.strip(' \t\r\v\f') for s in (t or '').split('\n')) if x]
-            n = len(lines)
-            if n:
-                counts = Counter(lines)
-                dup_line = (n - len(counts)) / n
-                total_chars = sum(len(x) for x in lines)
-                dup_chars = sum(len(x) * c for x, c in counts.items() if c > 1)
-                dup_char_frac = dup_chars / total_chars if total_chars else 0.0
-            else:
-                dup_line, dup_char_frac = 0.0, 0.0
-            words = [w for w in ws_split(t or '') if w]
-            if len(words) >= 2:
-                # NUL-joined (not tuples): matches the oracle's string
-                # gram key exactly, incl. pathological NUL-bearing words
-                grams = Counter(a + '\0' + b for a, b in zip(words, words[1:]))
-                top_bigram = max(grams.values()) / (len(words) - 1)
-            else:
-                top_bigram = 0.0
-            rows.append((n, round(dup_line, 6), round(dup_char_frac, 6), round(top_bigram, 6)))
-        return pd.DataFrame(rows, columns=['n_lines', 'dup_line_frac',
-                                           'dup_line_char_frac', 'top_bigram_frac'])
+        return pd.DataFrame([repetition_signals(t) for t in text], columns=REP_SCHEMA.fieldNames())
 
     return rep_udf
 
@@ -173,10 +178,27 @@ def repetition_stats(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'tex
     )
 
 
-def gopher_filter(
-    df: DataFrame,
-    id_col: str = 'doc_id',
-    text_col: str = 'text',
+def gopher_features(text: Column) -> list:
+    """The four token features the Gopher rules read — ``n_tokens``,
+    ``mean_word_len``, ``stopword_ratio``, ``punct_ratio`` — as aliased
+    Column algebra, rounded to the 6 places the stats queries publish
+    (so a document's flags always agree with its published stats row)."""
+    n_chars = F.length(text)
+    n_tokens = token_count(text)
+
+    def ratio(num: Column, den: Column) -> Column:
+        return F.round(F.when(den > 0, num / den).otherwise(F.lit(0.0)), 6)
+
+    return [
+        n_tokens.alias('n_tokens'),
+        ratio(n_chars, n_tokens).alias('mean_word_len'),
+        ratio(F.regexp_count(text, F.lit(LANG_MARKERS['en'])), n_tokens).alias('stopword_ratio'),
+        ratio(F.regexp_count(text, F.lit(PUNCT_RE)), n_chars).alias('punct_ratio'),
+    ]
+
+
+def gopher_flags(
+    rep: Column,
     min_tokens: int = 50,
     max_tokens: int = 100_000,
     min_mean_word_len: float = 3.0,
@@ -185,63 +207,61 @@ def gopher_filter(
     max_punct_ratio: float = 0.2,
     max_dup_line_frac: float = 0.30,
     max_top_bigram_frac: float = 0.18,
+) -> dict:
+    """The six Gopher rules (Rae et al. 2021 §A1.1, the subset our
+    features express) as ``{ok_<rule>: Column}`` over a projection that
+    carries ``gopher_features``' columns and a struct ``rep`` with the
+    ``dup_line_frac`` and ``top_bigram_frac`` repetition signals.  The
+    one home of the rule thresholds (the DuckDB twin in
+    ``__spark_entry__.oracle_sql`` must equal these defaults)."""
+    n_tokens, mwl = F.col('n_tokens'), F.col('mean_word_len')
+    return {
+        'ok_n_tokens': (n_tokens >= min_tokens) & (n_tokens <= max_tokens),
+        'ok_mean_word_len': (mwl >= min_mean_word_len) & (mwl <= max_mean_word_len),
+        'ok_stopwords': F.col('stopword_ratio') >= min_stopword_ratio,
+        'ok_punct': F.col('punct_ratio') <= max_punct_ratio,
+        'ok_dup_lines': rep['dup_line_frac'] <= max_dup_line_frac,
+        'ok_top_bigram': rep['top_bigram_frac'] <= max_top_bigram_frac,
+    }
+
+
+def all_of(cols) -> Column:
+    """Conjunction of boolean Columns (the ``keep`` verdict)."""
+    return reduce(lambda a, b: a & b, cols)
+
+
+def gopher_filter(
+    df: DataFrame,
+    id_col: str = 'doc_id',
+    text_col: str = 'text',
     carry: tuple = (),
+    **thresholds,
 ) -> DataFrame:
-    """Composite Gopher-rule document filter (Rae et al. 2021 §A1.1,
-    the subset our features express): per-doc boolean per rule plus the
+    """Composite Gopher-rule document filter: per-doc boolean per rule
+    (``gopher_flags``; ``thresholds`` override its defaults) plus the
     conjunction ``keep``.  Token-count window, mean-word-length window,
-    stopword floor, punctuation ceiling (all from the quality_features
-    Column algebra), duplicate-line and top-bigram ceilings (from the
+    stopword floor, punctuation ceiling (``gopher_features`` Column
+    algebra), duplicate-line and top-bigram ceilings (from the
     repetition Arrow kernel).
 
     ONE corpus scan: the Column features and the repetition pandas_udf
     evaluate in the same projection — composing ``quality_features ⋈
     repetition_stats`` would scan the text twice and shuffle for the
-    join, pure waste at crawl scale.  Comparisons use the same
-    round-6 values the stats queries publish, so a document's flags
-    here always agree with its published stats row.
+    join, pure waste at crawl scale.
     """
     from .util import ensure_parallelism
 
     t = F.col(text_col)
-    n_chars = F.length(t)
-    n_tokens = token_count(t)
-    punct_ratio = F.round(
-        F.when(n_chars > 0, F.regexp_count(t, F.lit(PUNCT_RE)) / n_chars).otherwise(F.lit(0.0)), 6
-    )
-    stop_ratio = F.round(
-        F.when(n_tokens > 0, F.regexp_count(t, F.lit(LANG_MARKERS['en'])) / n_tokens)
-        .otherwise(F.lit(0.0)), 6
-    )
-    mean_word_len = F.round(
-        F.when(n_tokens > 0, n_chars / n_tokens).otherwise(F.lit(0.0)), 6
-    )
     base = ensure_parallelism(df).select(
         F.col(id_col),
         *[F.col(c) for c in carry],  # ride the same projection, zero cost
-        n_tokens.alias('n_tokens'),
-        mean_word_len.alias('mean_word_len'),
-        stop_ratio.alias('stopword_ratio'),
-        punct_ratio.alias('punct_ratio'),
+        *gopher_features(t),
         _make_rep_udf()(t).alias('_r'),
     )
-    r = F.col('_r')
-    flags = [
-        ((F.col('n_tokens') >= min_tokens) & (F.col('n_tokens') <= max_tokens))
-        .alias('ok_n_tokens'),
-        ((F.col('mean_word_len') >= min_mean_word_len)
-         & (F.col('mean_word_len') <= max_mean_word_len)).alias('ok_mean_word_len'),
-        (F.col('stopword_ratio') >= min_stopword_ratio).alias('ok_stopwords'),
-        (F.col('punct_ratio') <= max_punct_ratio).alias('ok_punct'),
-        (r['dup_line_frac'] <= max_dup_line_frac).alias('ok_dup_lines'),
-        (r['top_bigram_frac'] <= max_top_bigram_frac).alias('ok_top_bigram'),
-    ]
-    out = base.select(id_col, *[F.col(c) for c in carry], *flags)
-    keep = F.lit(True)
-    for nm in ('ok_n_tokens', 'ok_mean_word_len', 'ok_stopwords',
-               'ok_punct', 'ok_dup_lines', 'ok_top_bigram'):
-        keep = keep & F.col(nm)
-    return out.withColumn('keep', keep)
+    flags = gopher_flags(F.col('_r'), **thresholds)
+    out = base.select(id_col, *[F.col(c) for c in carry],
+                      *[c.alias(nm) for nm, c in flags.items()])
+    return out.withColumn('keep', all_of(F.col(nm) for nm in flags))
 
 
 def fingerprint(df: DataFrame, text_col: str = 'text') -> DataFrame:

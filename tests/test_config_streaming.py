@@ -389,7 +389,7 @@ class TestStreamingIngest:
 class TestStreamingScrub:
     def test_streaming_scrub_native_and_delta_only(self, spark, tmp_path):
         """The full hygiene chain (mojibake → pii → quality) runs as a
-        NATIVE streaming transform — three stateless Arrow passes, no
+        NATIVE streaming transform — one stateless fused Arrow pass, no
         state store; availableNow drains the backlog exactly once, a
         second start sees only new files, and rows equal the batch
         scrub row-for-row including the scrubbed text."""

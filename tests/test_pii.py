@@ -155,7 +155,7 @@ class TestSparkOperator:
 
 class TestCleanCorpusComposition:
     """The composed hygiene pipeline (mojibake → pii → quality) must
-    stay ONE pipelined plan: three Arrow passes, no joins, no hash
+    stay ONE pipelined plan: one Python crossing, no joins, no hash
     shuffles."""
 
     def test_matches_chained_twins(self, spark):
@@ -181,16 +181,19 @@ class TestCleanCorpusComposition:
             assert got[i] == (ne + nip + ncc + nph,
                               hashlib.sha256(red.encode()).hexdigest()), i
 
-    def test_plan_three_arrow_passes_no_hash_shuffle(self, spark):
+    def test_plan_one_python_eval_no_hash_shuffle(self, spark):
         import re
 
         import __spark_entry__ as entry_mod
+        from crossings import python_nodes
 
         q = entry_mod.queries()['clean_corpus'](spark, '/root/testdata/sf0.001')
+        # mojibake repair, PII scrub and the repetition signals run in
+        # ONE fused Arrow eval (the token features are JVM Columns)
+        nodes = python_nodes(q)
+        assert [kind for kind, _desc in nodes] == ['ArrowEvalPython'], nodes
+        assert 'clean(' in nodes[0][1], nodes
         plan = q._jdf.queryExecution().executedPlan().toString()
-        # the three stage UDFs each evaluate once (<=2 plan prints under AQE)
-        for udf in ('fix(', 'scrub(', 'rep_udf('):
-            assert 1 <= plan.count(udf) <= 2, (udf, plan)
         # only the small-scan widening and the final oracle sort may
         # exchange — never a hash shuffle or join in the hygiene chain.
         # r7: the sort funnels through a SinglePartition repartition

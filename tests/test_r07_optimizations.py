@@ -352,6 +352,28 @@ class TestConnectedComponentsSingleTaskFastPath:
                                  local_max_edges=0)
                 assert fast == slow
 
+    def test_duplicate_node_ids_match_distributed_loop(self, spark):
+        """A node id listed more than once yields ONE output row on both
+        paths (rows compared as a multiset, not a set)."""
+        import random
+
+        from markdown_articles_tool_spark.training.cluster import connected_components
+
+        rng = random.Random(97)
+        for _ in range(3):
+            ids = rng.sample(range(300), rng.randint(2, 25))
+            node_rows = ids + [rng.choice(ids) for _ in range(rng.randint(1, 10))]
+            rng.shuffle(node_rows)
+            pairs = spark.createDataFrame(
+                [tuple(rng.sample(ids, 2)) for _ in range(rng.randint(1, 30))],
+                'a_id long, b_id long')
+            nodes = spark.createDataFrame([(n,) for n in node_rows], 'doc_id long')
+            fast, slow = (
+                sorted(tuple(r) for r in connected_components(pairs, nodes, **kw).collect())
+                for kw in ({}, {'local_max_edges': 0}))
+            assert fast == slow
+            assert len(fast) == len(ids)
+
     def test_convergence_verdict_parity_on_chain(self, spark):
         chain = [(i, i + 1) for i in range(40)]
         nodes = list(range(41))

@@ -420,35 +420,78 @@ class TestSparkOperator:
         assert 'Exchange' not in plan_str, 'warc read must not shuffle'
 
     def test_composition_matches_twin_and_no_shuffle(self, spark, tmp_path_factory):
-        import hashlib
-
-        from oracle_kernels import main_content_blocks, main_content_text
         from markdown_articles_tool_spark.sources.warc import warc_main_content
 
         n = 20
         tmp = str(tmp_path_factory.mktemp('warcmc') / 'files')
         corpus.warc_files_df(spark, n).write.parquet(tmp)
         df = warc_main_content(spark.read.parquet(tmp))
-        got = sorted(
-            (r['url'], hashlib.sha256(r['main_text'].encode()).hexdigest(),
-             r['n_blocks'], r['n_kept'])
-            for r in df.collect())
-        exp = []
-        for f in range((n + corpus.DOCS_PER_WARC - 1) // corpus.DOCS_PER_WARC):
-            for rec_ in warc_responses_seq(corpus.warc_file_bytes(f, n)):
-                if rec_[3] == 200 and rec_[4] == 'text/html':
-                    blocks = main_content_blocks(rec_[7].encode('utf-8'))
-                    exp.append((rec_[1],
-                                hashlib.sha256(main_content_text(blocks).encode()).hexdigest(),
-                                len(blocks), sum(1 for b in blocks if b[5])))
-        assert got == sorted(exp)
+        exp, _dropped = _twin_main_content(
+            corpus.warc_file_bytes(f, n)
+            for f in range((n + corpus.DOCS_PER_WARC - 1) // corpus.DOCS_PER_WARC))
+        assert _main_content_rows(df) == exp
         assert exp  # the gate kept something
 
         jdf = df._jdf
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString('formatted')
         plan_str = jdf.queryExecution().explainString(mode)
-        assert len(re.findall(r'\(\d+\) MapInPandas', plan_str)) == 2
+        # the record walk, the gate and the strip share ONE Python pass
+        assert len(re.findall(r'\(\d+\) MapInPandas', plan_str)) == 1
         assert 'Exchange' not in plan_str, 'warc→main-content must not shuffle'
+
+    def test_gate_drops_non_200_and_non_html_records(self, spark):
+        """Records that fail the fetch-policy gate (non-200 status,
+        non-HTML mime) never reach the strip; the kept pages equal the
+        twin chain (record walk → gate → main-content kernel)."""
+        from markdown_articles_tool_spark.sources.warc import warc_main_content
+
+        page = ('<html><body><nav>home | about</nav><article><p>{} is the '
+                'story of the day, told in words that a reader keeps.</p>'
+                '</article><footer>(c) site</footer></body></html>')
+        shapes = [(200, 'text/html'), (404, 'text/html'), (200, 'text/plain'),
+                  (301, 'text/html'), (500, 'text/html'), (200, 'application/pdf'),
+                  (200, 'application/xhtml+xml')]
+        blobs = [
+            W.build_warc([('response', f'https://gate.example/{f}/{k}', f'2024-01-0{f + 1}T00:00:00Z',
+                           status, mime, page.format(f'page {f}-{k} é'), None, None)
+                          for k, (status, mime) in enumerate(shapes)])
+            for f in range(3)]
+        files = spark.createDataFrame(
+            [(f'gate-{f}.warc.gz', b) for f, b in enumerate(blobs)], 'file_name string, data binary')
+        got = _main_content_rows(warc_main_content(files))
+        exp, dropped = _twin_main_content(blobs)
+        assert got == exp
+        assert len(exp) == 3 and len(dropped) == 3 * (len(shapes) - 1)
+        assert not {u for u, *_ in got} & set(dropped)
+
+
+def _main_content_rows(df) -> list:
+    """Sorted (url, main_sha, n_blocks, n_kept) of a main-content frame."""
+    import hashlib
+
+    return sorted((r['url'], hashlib.sha256(r['main_text'].encode()).hexdigest(),
+                   r['n_blocks'], r['n_kept']) for r in df.collect())
+
+
+def _twin_main_content(blobs):
+    """The twin chain over archive blobs (record walk → 200 + text/html
+    gate → main-content kernel): sorted (url, main_sha, n_blocks,
+    n_kept) of the kept pages, and the urls of the gated-out records."""
+    import hashlib
+
+    from oracle_kernels import main_content_blocks, main_content_text
+
+    kept, dropped = [], []
+    for data in blobs:
+        for rec_ in warc_responses_seq(data):
+            if rec_[3] == 200 and rec_[4] == 'text/html':
+                blocks = main_content_blocks(rec_[7].encode('utf-8'))
+                kept.append((rec_[1],
+                             hashlib.sha256(main_content_text(blocks).encode()).hexdigest(),
+                             len(blocks), sum(1 for b in blocks if b[5])))
+            else:
+                dropped.append(rec_[1])
+    return sorted(kept), dropped
 
 
 class TestCdxSurt:
