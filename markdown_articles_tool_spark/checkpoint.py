@@ -30,9 +30,23 @@ no streaming concept).  Each transformer pass runs in two phases:
   full if its marker is missing; it is deterministic and overwrite-
   idempotent.
 
+Images: a one-pass config's phase B writes its images straight to
+``images`` (a pass's ``images_out`` is already unique per
+``real_path``) and keeps both markers, ``pass=0_final`` and
+``images_final``; the pass counts as done only when both are
+committed, so a crash anywhere before the second re-runs phase B.
+Multi-pass configs stage each pass's images under
+``stage/pass=P/images`` and fold them into ``images`` at the end (first
+pass wins).  Dedup registrations are staged only for a next pass to
+read, so never for the last one.
+
 Lineage parquet-style rows: per (pass, shard) JSON with n_docs +
 per-status link counts + wall seconds (the per-partition metrics
-table), plus a per-pass global row.
+table), plus a per-pass global row.  ``n_links`` and the status
+counts come from a ``pyspark.sql.Observation`` on the shard's links
+staging write, and the pass row's ``n_docs_out`` from one on its docs
+write: the writes count their own rows, with no read-back.  ``n_docs``
+per shard comes from one shard-size aggregate per pass.
 """
 
 from __future__ import annotations
@@ -43,11 +57,14 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from .core import docfold
 from .core.linkflow import DedupVariant, TransformConfig
 from .io_sinks import ParquetMarkerSink, TableSink
 from .pipeline import LINKMETA_COLS, extract_pass_links, finish_pass
+
+LINK_STATUSES = (docfold.OK, docfold.SKIPPED, docfold.MIME_DROP, docfold.NO_FILENAME, docfold.ERROR)
 
 
 @dataclass
@@ -88,10 +105,14 @@ def run_with_resume(
     sink = sink or ParquetMarkerSink(out_dir)
     ran, skipped = set(), set()
     finals_ran = False
+    # one pass: phase B's images are final (nothing to fold across
+    # passes), so it writes them to ``images`` itself
+    direct_images = len(cfg.input_formats) == 1
 
     for i, fmt in enumerate(cfg.input_formats):
         last = i == len(cfg.input_formats) - 1
-        if sink.is_committed(f'pass={i}_final'):
+        finals = [f'pass={i}_final'] + (['images_final'] if direct_images else [])
+        if all(sink.is_committed(m) for m in finals):
             skipped.update(range(n_shards))
             continue
 
@@ -121,22 +142,25 @@ def run_with_resume(
             links, fetched, cached = extract_pass_links(
                 shard_docs, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
             )
-            links_name = f'stage/pass={i}/links/shard={k}'
-            sink.write(links, links_name)
+            # the staging write counts its own rows; one Observation per
+            # write, as shards run on pool threads
+            obs = Observation()
+            sink.write(
+                links.observe(obs, F.count(F.lit(1)).alias('n_links'),
+                              *[F.count_if(F.col('status') == s).alias(s) for s in LINK_STATUSES]),
+                f'stage/pass={i}/links/shard={k}',
+            )
             # sha_hex staged WITH the content so phase B can pick a
             # consistent deterministic winner per fetch_key
             sink.write(fetched.select('fetch_key', 'sha_hex', 'content'),
                        f'stage/pass={i}/fetched/shard={k}')
-            status_counts = {
-                r['status']: r['count'] for r in links.groupBy('status').count().collect()
-            }
+            counts = obs.get
             _write_lineage(out_dir, f'shard-{i}-{k}.json', {
                 'pass': i,
                 'shard': k,
-                # footer-count of the staged parquet, not a recompute
-                'n_links': sink.read(spark, links_name).count(),
+                'n_links': counts['n_links'],
                 'n_docs': n_docs_by_shard.get(k, 0),
-                'status_counts': status_counts,
+                'status_counts': {s: counts[s] for s in LINK_STATUSES if counts[s]},
                 'wall_sec': round(time.time() - t0, 3),
             })
             sink.mark_committed(f'pass={i}_shard={k}')
@@ -177,16 +201,8 @@ def run_with_resume(
         # key" — sha_hex is staged alongside the content so the picked
         # row stays internally consistent (bytes + hash from the SAME
         # shard's fetch)
-        staged_fetch = sink.read(spark, f'stage/pass={i}/fetched')
-        if 'sha_hex' not in staged_fetch.columns:
-            # staging-format compat: shards staged before r4 wrote only
-            # (fetch_key, content).  sha_hex is definitionally
-            # sha256(content) (operators.fetch.derive_fetched), so an
-            # old-format stage is recoverable by recomputing it here —
-            # one extra hash pass over the staged bytes, no restage
-            staged_fetch = staged_fetch.withColumn('sha_hex', F.sha2('content', 256))
         fetched_all = (
-            staged_fetch.groupBy('fetch_key')
+            sink.read(spark, f'stage/pass={i}/fetched').groupBy('fetch_key')
             .agg(F.min_by(F.struct('sha_hex', 'content'), 'shard').alias('w'))
             .select('fetch_key', 'w.sha_hex', 'w.content')
         )
@@ -195,24 +211,28 @@ def run_with_resume(
             dedup_state = sink.read(spark, f'stage/pass={i - 1}/registrations')
         res = finish_pass(cur_docs, links_all, fetched_all, cfg, pass_idx=i, dedup_state=dedup_state)
 
+        obs = Observation()
+        docs_out = res.docs_out.observe(obs, F.count(F.lit(1)).alias('n_docs_out'))
         if last:
-            sink.write(res.docs_out, 'docs')
+            sink.write(docs_out, 'docs')
         else:
-            sink.write(res.docs_out.withColumnRenamed('text_out', 'text'), f'docs_pass/pass={i}')
-        sink.write(res.images_out.withColumn('_pass', F.lit(i)), f'stage/pass={i}/images')
-        if res.dedup_registrations is not None:
+            sink.write(docs_out.withColumnRenamed('text_out', 'text'), f'docs_pass/pass={i}')
+        if direct_images:
+            sink.write(res.images_out, 'images')
+        else:
+            sink.write(res.images_out.withColumn('_pass', F.lit(i)), f'stage/pass={i}/images')
+        if res.dedup_registrations is not None and not last:
             sink.write(res.dedup_registrations, f'stage/pass={i}/registrations')
         _write_lineage(out_dir, f'pass-{i}.json', {
             'pass': i,
-            'n_docs_out': sink.read(
-                spark, 'docs' if last else f'docs_pass/pass={i}'
-            ).count(),
+            'n_docs_out': obs.get['n_docs_out'],
             'wall_sec': round(time.time() - t0, 3),
         })
-        sink.mark_committed(f'pass={i}_final')
+        for m in finals:
+            sink.mark_committed(m)
 
     # ------------------------------------- final images (cross-pass wins)
-    if finals_ran or not sink.is_committed('images_final'):
+    if not direct_images and (finals_ran or not sink.is_committed('images_final')):
         imgs = sink.read(spark, 'stage/pass=*/images')
         # first write wins across passes (skip-if-exists,
         # image_downloader.py:287-289) — same fold as transform_documents

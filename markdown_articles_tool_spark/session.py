@@ -98,6 +98,10 @@ def get_spark(
             os.environ.get('SPARK_GRAFT_CACHE_COMPRESS', 'false'),
         )
         .config('spark.sql.session.timeZone', 'UTC')
+        # a sharded transform run generates ~118 distinct classes; at
+        # Spark's default of 100 cached entries every warm run
+        # recompiled 72-79 of them (Janino, then the JIT warming each)
+        .config('spark.sql.codegen.cache.maxEntries', '1000')
     )
     entry = worker_entry_path(master)
     if entry is not None:

@@ -46,6 +46,54 @@ def test_full_run_then_resume_noop(spark, docs, tmp_path):
     assert _texts(spark, out) == texts1
 
 
+def _run_counters():
+    import sys as _sys
+
+    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), '..', 'tools'))
+    from run_cost import counters, delta
+
+    return counters, delta
+
+
+def test_one_pass_run_cost(spark, docs, tmp_path):
+    """A one-pass 4-shard run starts 11 SQL executions: per shard the
+    links and fetched staging writes (lineage rides on the links write),
+    per pass the shard-size collect and the docs and images writes.  It
+    stages no images (phase B writes the final table) and no dedup
+    registrations (no later pass reads them)."""
+    counters, delta = _run_counters()
+    out = tmp_path / 'out'
+    cfg = TransformConfig(skip_all_errors=True, deduplication=DedupVariant.CONTENT_HASH)
+    c0 = counters(spark)
+    run_with_resume(spark, docs, cfg, str(out), n_shards=4)
+    assert delta(c0, counters(spark))['sql_executions'] <= 11
+    for staged in ('images', 'registrations'):
+        assert not os.path.exists(out / 'stage' / 'pass=0' / staged)
+
+
+def test_warm_run_compiles_no_class(spark, docs, tmp_path):
+    """The session's codegen cache holds every class a sharded run
+    generates, so warm runs compile none.  Phase B's dedup-winner join
+    is planned by AQE as the shuffle stages finish, and each order of
+    finishing yields its own classes, so a warm run may still meet a
+    new variant: allow a few warm runs to see them all, none of which
+    compiles more than a handful.  (At Spark's default cap of 100
+    entries every warm run recompiled 75-91 of about 116 classes.)"""
+    counters, delta = _run_counters()
+    cfg = TransformConfig(skip_all_errors=True, deduplication=DedupVariant.CONTENT_HASH)
+
+    def compiles(run: int) -> int:
+        c0 = counters(spark)
+        run_with_resume(spark, docs, cfg, str(tmp_path / f'run{run}'), n_shards=4)
+        return delta(c0, counters(spark))['janino_compiles']
+
+    compiles(0)  # cold, unless an earlier test ran the same plans
+    warm = []
+    while len(warm) < 3 and (not warm or warm[-1] > 0):
+        warm.append(compiles(len(warm) + 1))
+    assert warm[-1] == 0 and max(warm) <= 10, warm
+
+
 def test_crash_and_resume_byte_identical(spark, docs, tmp_path):
     out_a = str(tmp_path / 'a')
     out_b = str(tmp_path / 'b')
@@ -54,29 +102,69 @@ def test_crash_and_resume_byte_identical(spark, docs, tmp_path):
     # uninterrupted run
     run_with_resume(spark, docs, cfg, out_a, n_shards=4)
 
-    # "crashed" run: simulate dying after 2 shard commits, before the
-    # global finish — wipe the markers of shards 2,3 and the finals
+    # "crashed" runs, each from a complete output: the markers a crash
+    # leaves missing (markers are written last) -> the shards it re-runs
+    crashes = [
+        # dying after 2 shard commits, before the global finish
+        (('pass=0_shard=2', 'pass=0_shard=3', 'pass=0_final', 'images_final'), [2, 3]),
+        # dying after phase B's direct `images` write, before its markers
+        (('pass=0_final', 'images_final'), []),
+        # dying between the two markers
+        (('images_final',), []),
+    ]
     run_with_resume(spark, docs, cfg, out_b, n_shards=4)
-    for name in ('pass=0_shard=2', 'pass=0_shard=3', 'pass=0_final', 'images_final'):
-        os.remove(os.path.join(out_b, 'commits', name))
-    rep = run_with_resume(spark, docs, cfg, out_b, n_shards=4)
-    assert sorted(rep.shards_run) == [2, 3]
-    assert sorted(rep.shards_skipped) == [0, 1]
+    for lost, rerun in crashes:
+        for name in lost:
+            os.remove(os.path.join(out_b, 'commits', name))
+        rep = run_with_resume(spark, docs, cfg, out_b, n_shards=4)
+        assert rep.shards_run == rerun, lost
+        assert rep.shards_skipped == [k for k in range(4) if k not in rerun], lost
+        # phase B re-ran: it rewrote both markers
+        assert all(os.path.exists(os.path.join(out_b, 'commits', m))
+                   for m in ('pass=0_final', 'images_final')), lost
 
-    assert _texts(spark, out_a) == _texts(spark, out_b)
-    assert _images(spark, out_a) == _images(spark, out_b)
+        assert _texts(spark, out_a) == _texts(spark, out_b), lost
+        assert _images(spark, out_a) == _images(spark, out_b), lost
+
+
+# (config, shard count) per lineage case: the 24-doc fixture yields only
+# ok, error and mime_drop links; a skip-list hit adds skipped, and more
+# shards than docs leave some shards empty
+SKIP_HITS = frozenset({'https://www.google.com/', './pic/pic6s.png'})
+LINEAGE_CASES = [
+    (TransformConfig(skip_all_errors=True), 2),
+    (TransformConfig(skip_all_errors=True), 3),
+    (TransformConfig(skip_all_errors=True, skip_list=SKIP_HITS), 40),
+]
 
 
 def test_lineage_rows(spark, docs, tmp_path):
-    out = str(tmp_path / 'out')
-    cfg = TransformConfig(skip_all_errors=True)
-    run_with_resume(spark, docs, cfg, out, n_shards=2)
-    rows = lineage(out)
-    assert len(rows) == 2
-    assert sum(r['n_docs'] for r in rows) == 24
-    assert all('status_counts' in r and 'wall_sec' in r for r in rows)
-    prows = pass_lineage(out)
-    assert len(prows) == 1 and prows[0]['n_docs_out'] == 24
+    """Shard lineage counts agree with the staged links they describe,
+    and the pass row with the docs written."""
+    for case, (cfg, n_shards) in enumerate(LINEAGE_CASES):
+        out = str(tmp_path / f'out{case}')
+        run_with_resume(spark, docs, cfg, out, n_shards=n_shards)
+        rows = lineage(out)
+        assert len(rows) == n_shards
+        assert sum(r['n_docs'] for r in rows) == 24
+        assert all('status_counts' in r and 'wall_sec' in r for r in rows)
+
+        staged = {}
+        for r in (spark.read.parquet(os.path.join(out, 'stage', 'pass=0', 'links'))
+                  .groupBy('shard', 'status').count().collect()):
+            staged.setdefault(r['shard'], {})[r['status']] = r['count']
+        for r in rows:
+            want = staged.get(r['shard'], {})
+            assert r['status_counts'] == want, r
+            assert r['n_links'] == sum(want.values()), r
+            # a status missing from the lineage would leave this short
+            assert sum(r['status_counts'].values()) == r['n_links'], r
+        if cfg.skip_list:
+            assert any('skipped' in r['status_counts'] for r in rows)
+            assert any(r['n_docs'] == 0 and r['n_links'] == 0 for r in rows)
+
+        prows = pass_lineage(out)
+        assert len(prows) == 1 and prows[0]['n_docs_out'] == read_output(spark, out).count() == 24
 
 
 def test_xxhash64_twin_matches_spark(spark):
@@ -114,31 +202,33 @@ def test_lineage_df_matches_independent_twin(spark, docs, tmp_path):
 
     from markdown_articles_tool_spark.checkpoint import lineage_df
 
-    out = str(tmp_path / 'out')
-    cfg = TransformConfig(skip_all_errors=True)
-    run_with_resume(spark, docs, cfg, out, n_shards=3)
-    rep = run_with_resume(spark, docs, cfg, out, n_shards=3)  # resumed
-    assert rep.shards_run == []
-
-    got = sorted(
-        tuple(r) for r in lineage_df(spark, out)
-        .select('pass_idx', 'shard', 'n_docs', 'n_links', 'status', 'n_status').collect()
-    )
-
     assets = corpus.ModelAssetStore()
-    n_docs, n_links = defaultdict(int), defaultdict(int)
-    counts = defaultdict(lambda: defaultdict(int))
-    for url, text in corpus.docs_list(24):
-        k = shard_of(url, 3)
-        n_docs[k] += 1
-        for src, _w, _h in md_image_links(text):
-            n_links[k] += 1
-            counts[k][link_status(cfg, url, src, assets)] += 1
-    want = sorted(
-        (0, k, n_docs[k], n_links[k], s, c)
-        for k in range(3) for s, c in counts[k].items()
-    )
-    assert got == want
+    for case, (cfg, n_shards) in enumerate(LINEAGE_CASES):
+        out = str(tmp_path / f'out{case}')
+        run_with_resume(spark, docs, cfg, out, n_shards=n_shards)
+        rep = run_with_resume(spark, docs, cfg, out, n_shards=n_shards)  # resumed
+        assert rep.shards_run == []
+
+        got = sorted(
+            tuple(r) for r in lineage_df(spark, out)
+            .select('pass_idx', 'shard', 'n_docs', 'n_links', 'status', 'n_status').collect()
+        )
+
+        n_docs, n_links = defaultdict(int), defaultdict(int)
+        counts = defaultdict(lambda: defaultdict(int))
+        for url, text in corpus.docs_list(24):
+            k = shard_of(url, n_shards)
+            n_docs[k] += 1
+            for src, _w, _h in md_image_links(text):
+                n_links[k] += 1
+                counts[k][link_status(cfg, url, src, assets)] += 1
+        want = sorted(
+            (0, k, n_docs[k], n_links[k], s, c)
+            for k in range(n_shards)
+            # a shard without links keeps one '(none)' row
+            for s, c in (counts[k].items() or [('(none)', 0)])
+        )
+        assert got == want
 
 
 def test_sharded_equals_global_on_dup_heavy_corpus(spark, tmp_path):
