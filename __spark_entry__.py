@@ -85,15 +85,7 @@ def q_extract_links_corpus(spark, sf_dir):
     ).select(
         'url', 'ord', F.col('lk.link').alias('link'), F.col('lk.w').alias('w'), F.col('lk.h').alias('h')
     )
-    # the global sort exists only for oracle determinism.  orderBy would
-    # range-partition, whose sampling pass executes the extraction-UDF
-    # pipeline a second time (r2 regression: 0.68 s -> 4.83 s), and the
-    # r3 persist workaround leaked cached blocks into the session.
-    # Instead: keep the UDF stage at cluster width, funnel only the
-    # narrow (url, ord, link, w, h) rows into one partition and sort
-    # there — no sampling pass, no cache.  Oracle-path shape only; the
-    # production pipeline never globally sorts links.
-    return exploded.repartition(1).sortWithinPartitions('url', 'ord')
+    return _sorted1(exploded, 'url', 'ord')
 
 
 def q_main_content(spark, sf_dir):

@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from .core import docfold
 from .core.linkflow import DedupVariant, TransformConfig
 from .io_sinks import ParquetMarkerSink, TableSink
-from .pipeline import LINKMETA_COLS, extract_pass_links, finish_pass
+from .pipeline import LINKMETA_COLS, extract_pass_links, finish_pass, first_pass_wins
 
 LINK_STATUSES = (docfold.OK, docfold.SKIPPED, docfold.MIME_DROP, docfold.NO_FILENAME, docfold.ERROR)
 
@@ -233,13 +233,7 @@ def run_with_resume(
 
     # ------------------------------------- final images (cross-pass wins)
     if not direct_images and (finals_ran or not sink.is_committed('images_final')):
-        imgs = sink.read(spark, 'stage/pass=*/images')
-        # first write wins across passes (skip-if-exists,
-        # image_downloader.py:287-289) — same fold as transform_documents
-        sink.write(
-            imgs.groupBy('real_path').agg(F.min_by('content', '_pass').alias('content')),
-            'images',
-        )
+        sink.write(first_pass_wins(sink.read(spark, 'stage/pass=*/images')), 'images')
         sink.mark_committed('images_final')
 
     return RunReport(n_shards, sorted(ran), sorted(skipped - ran))

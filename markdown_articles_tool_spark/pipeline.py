@@ -375,24 +375,12 @@ def finish_pass(
     return PassResult(docs_out, links_audit, images_out, dedup_registrations, cached=cached)
 
 
-def transform_pass(
-    docs: DataFrame,
-    cfg: TransformConfig,
-    fmt: str = 'md',
-    pass_idx: int = 0,
-    fetcher: Optional[Fetcher] = None,
-    local_assets: Optional[dict] = None,
-    dedup_state: Optional[DataFrame] = None,
-) -> PassResult:
-    """One transformer pass (E5 chaining runs these sequentially).
-
-    ``docs``: DataFrame(url string, text string).  Composition of the
-    shard-local and global halves above.
-    """
-    links, fetched, cached = extract_pass_links(
-        docs, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
-    )
-    return finish_pass(docs, links, fetched, cfg, pass_idx=pass_idx, dedup_state=dedup_state, cached=cached)
+def first_pass_wins(images: DataFrame) -> DataFrame:
+    """(real_path, content) with, per path, the bytes of the earliest
+    ``_pass`` that wrote it: across chained passes the first write wins
+    (skip-if-exists, image_downloader.py:287-289).  ``images`` is the
+    union of every pass's ``images_out`` tagged with its ``_pass``."""
+    return images.groupBy('real_path').agg(F.min_by('content', '_pass').alias('content'))
 
 
 def _resized_bytes():
@@ -504,9 +492,10 @@ def transform_documents(
     cached: List[DataFrame] = []
     dedup_state = None
     for i, fmt in enumerate(cfg.input_formats):
-        res = transform_pass(
-            cur, cfg, fmt=fmt, pass_idx=i, fetcher=fetcher, local_assets=local_assets, dedup_state=dedup_state
+        links, fetched, pass_cached = extract_pass_links(
+            cur, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
         )
+        res = finish_pass(cur, links, fetched, cfg, pass_idx=i, dedup_state=dedup_state, cached=pass_cached)
         audits.append(res.links_audit)
         images.append(res.images_out.withColumn('_pass', F.lit(i)))
         cached.extend(res.cached)
@@ -524,7 +513,6 @@ def transform_documents(
     imgs = images[0]
     for im in images[1:]:
         imgs = imgs.unionByName(im)
-    # first write wins across passes (skip-if-exists, image_downloader.py:287-289)
-    images_out = imgs.groupBy('real_path').agg(F.min_by('content', '_pass').alias('content'))
 
-    return PipelineResult(cur.withColumnRenamed('text', 'text_out'), audit, images_out, cached=tuple(cached))
+    return PipelineResult(cur.withColumnRenamed('text', 'text_out'), audit, first_pass_wins(imgs),
+                          cached=tuple(cached))

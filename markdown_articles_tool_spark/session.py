@@ -4,6 +4,21 @@ Tuned for correctness-critical determinism plus the scale posture from
 SURVEY.md §4: AQE on (skew joins, coalesced shuffle), Arrow on (every
 row-level op here is a pandas UDF), and shuffle partitions sized for
 the local harness (on a real cluster these come from spark-submit).
+
+The package reads five environment settings, all deployment-shaped
+(an address or the size of the machine it runs on):
+
+- ``SPARK_GRAFT_MASTER``: the Spark master URL (default
+  ``local[$SPARK_GRAFT_CPUS]``).
+- ``SPARK_GRAFT_CPUS``: local cores when no master is given (32).
+- ``SPARK_GRAFT_SHUFFLE_PARTITIONS``: ``spark.sql.shuffle.partitions``
+  when the caller passes none (32).
+- ``SPARK_GRAFT_DRIVER_MEM``: ``spark.driver.memory`` (16g).
+- ``SPARK_GRAFT_SHARD_WORKERS``: concurrent shard jobs of
+  ``checkpoint.run_with_resume`` (4; read there).
+
+Every other config below is a constant; the comment beside it gives
+the measurement that chose it.
 """
 
 from __future__ import annotations
@@ -47,7 +62,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config('spark.sql.shuffle.partitions', str(shuffle_partitions))
-        .config('spark.sql.adaptive.enabled', 'false' if os.environ.get('SPARK_GRAFT_AQE') == '0' else 'true')
+        .config('spark.sql.adaptive.enabled', 'true')
         .config('spark.sql.adaptive.skewJoin.enabled', 'true')
         .config('spark.sql.adaptive.coalescePartitions.enabled', 'true')
         # AQE coalesces by shuffle-read BYTES; several of our stages are
@@ -60,19 +75,13 @@ def get_spark(
         # post-shuffle partitions pay more in pandas-UDF batch setup
         # and scheduling than they win back in tail smoothing, same
         # verdict as the shuffle-mult and input-file-count A/Bs
-        .config(
-            'spark.sql.adaptive.advisoryPartitionSizeInBytes',
-            os.environ.get('SPARK_GRAFT_AQE_ADVISORY', '64m'),
-        )
+        .config('spark.sql.adaptive.advisoryPartitionSizeInBytes', '64m')
         .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
         # 20k-row Arrow batches: measured A/B on the 32-core corpus
         # transform — 10k: 7.80s, 20k: 7.20s (+8%), 40k: 7.44s,
         # 80k: 7.55s; bigger batches amortize per-batch UDF setup +
         # Arrow transfer until batch-tail skew wins
-        .config(
-            'spark.sql.execution.arrow.maxRecordsPerBatch',
-            os.environ.get('SPARK_GRAFT_ARROW_BATCH', '20000'),
-        )
+        .config('spark.sql.execution.arrow.maxRecordsPerBatch', '20000')
         # keep the broadcast threshold at Spark's default 10MB: the
         # pipeline carries binary image content in several tables and an
         # over-eager broadcast of one of those kills the driver
@@ -81,22 +90,13 @@ def get_spark(
         # throughput collector: G1's concurrent phases compete with task
         # threads for cores on small executors (measured 25s → 14s on
         # the 8-core corpus transform); batch pipelines want ParallelGC
-        .config(
-            'spark.driver.extraJavaOptions',
-            os.environ.get('SPARK_GRAFT_JAVA_OPTS', '-XX:+UseParallelGC'),
-        )
+        .config('spark.driver.extraJavaOptions', '-XX:+UseParallelGC')
         # same collector on real executors (driver==executor in local mode)
-        .config(
-            'spark.executor.extraJavaOptions',
-            os.environ.get('SPARK_GRAFT_JAVA_OPTS', '-XX:+UseParallelGC'),
-        )
+        .config('spark.executor.extraJavaOptions', '-XX:+UseParallelGC')
         .config('spark.ui.enabled', 'false')
         # image bytes are high-entropy (already-compressed formats):
         # columnar-cache compression burns CPU for ~no size win
-        .config(
-            'spark.sql.inMemoryColumnarStorage.compressed',
-            os.environ.get('SPARK_GRAFT_CACHE_COMPRESS', 'false'),
-        )
+        .config('spark.sql.inMemoryColumnarStorage.compressed', 'false')
         .config('spark.sql.session.timeZone', 'UTC')
         # a sharded transform run generates ~118 distinct classes; at
         # Spark's default of 100 cached entries every warm run

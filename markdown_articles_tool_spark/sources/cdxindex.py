@@ -42,8 +42,6 @@ finds ``https://example.com/a?a=1&b=2``'s records) and the
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 KEY_COLS = ('surt', 'file_name', 'ord')
@@ -54,7 +52,7 @@ KEY_COLS = ('surt', 'file_name', 'ord')
 #: 200 rows is as wrong as a 10 TB index in 32 shards of 300 GB).
 #: 250k CDX rows is a conservative stand-in for the "few hundred MB a
 #: shard" production rule; real deployments size explicitly.
-_TARGET_ROWS_PER_SHARD = max(1, int(os.environ.get('SPARK_GRAFT_CDX_SHARD_ROWS', '250000')))
+_TARGET_ROWS_PER_SHARD = 250_000
 
 
 def write_cdx_index(cdx: DataFrame, path: str, n_shards: int | None = None) -> None:

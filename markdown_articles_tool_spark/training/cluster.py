@@ -28,17 +28,17 @@ a loud failure.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-# Below these sizes the whole label propagation runs inside ONE
-# executor task (see connected_components) instead of K distributed
-# rounds of join+agg+checkpoint jobs — at near-dup-pair sizes the
-# distributed loop's cost is stage scheduling, not data.  A crawl-scale
-# pair table exceeds the bounds and takes the distributed rounds.
-_CC_LOCAL_MAX_EDGES = int(os.environ.get('SPARK_GRAFT_CC_LOCAL_EDGES', '100000'))
-_CC_LOCAL_MAX_NODES = int(os.environ.get('SPARK_GRAFT_CC_LOCAL_NODES', '500000'))
+from .util import LOCAL_MAX_EDGES, fits_one_task
+
+# Below this node count (and LOCAL_MAX_EDGES pairs) the whole label
+# propagation runs inside ONE executor task (see connected_components)
+# instead of K distributed rounds of join+agg+checkpoint jobs — at
+# near-dup-pair sizes the distributed loop's cost is stage scheduling,
+# not data.  A crawl-scale pair table exceeds the bounds and takes the
+# distributed rounds.
+_CC_LOCAL_MAX_NODES = 500_000
 
 
 def _cc_partition(batches, max_iter: int, shortcut: bool):
@@ -118,7 +118,7 @@ def connected_components(
     b_col: str = 'b_id',
     max_iter: int = 50,
     shortcut: bool = True,
-    local_max_edges: int | None = None,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(id_col, cluster_rep) for every node; cluster_rep = min id in the
     node's connected component (singletons map to themselves).
@@ -148,35 +148,34 @@ def connected_components(
     # update rule, same convergence verdict), so output AND the
     # non-convergence raise are identical.  NOT a driver loop: rows
     # shuffle to one executor task; only the one-row sentinel check
-    # reads the materialized checkpoint.
-    limit_e = _CC_LOCAL_MAX_EDGES if local_max_edges is None else int(local_max_edges)
-    if pairs.count() <= limit_e:
-        if nodes_u.count() <= _CC_LOCAL_MAX_NODES:
-            from pyspark.sql.types import LongType, StructField, StructType
+    # reads the materialized checkpoint.  ``local_max_edges <= 0``
+    # forces the distributed rounds.
+    if fits_one_task(pairs, local_max_edges) and fits_one_task(nodes_u, _CC_LOCAL_MAX_NODES):
+        from pyspark.sql.types import LongType, StructField, StructType
 
-            dt = nodes_u.schema['u'].dataType
-            packed = nodes_u.select(
-                'u', F.col('u').alias('v'), F.lit(True).alias('_tag')
-            ).unionByName(pairs.select('u', 'v', F.lit(False).alias('_tag')))
-            out_schema = StructType([
-                StructField('u', dt), StructField('label', dt),
-                StructField('_nc', LongType()),
-            ])
-            res = (
-                packed.repartition(1)
-                .mapInPandas(lambda it: _cc_partition(it, max_iter, shortcut),
-                             out_schema)
-                .localCheckpoint(eager=True)
+        dt = nodes_u.schema['u'].dataType
+        packed = nodes_u.select(
+            'u', F.col('u').alias('v'), F.lit(True).alias('_tag')
+        ).unionByName(pairs.select('u', 'v', F.lit(False).alias('_tag')))
+        out_schema = StructType([
+            StructField('u', dt), StructField('label', dt),
+            StructField('_nc', LongType()),
+        ])
+        res = (
+            packed.repartition(1)
+            .mapInPandas(lambda it: _cc_partition(it, max_iter, shortcut),
+                         out_schema)
+            .localCheckpoint(eager=True)
+        )
+        pairs.unpersist()
+        sentinel = res.where(F.col('_nc') >= 0).select('_nc').collect()
+        if sentinel:
+            raise RuntimeError(
+                f'connected_components did not converge within max_iter={max_iter} rounds '
+                f'(last round still changed {sentinel[0]["_nc"]} labels); raise max_iter'
             )
-            pairs.unpersist()
-            sentinel = res.where(F.col('_nc') >= 0).select('_nc').collect()
-            if sentinel:
-                raise RuntimeError(
-                    f'connected_components did not converge within max_iter={max_iter} rounds '
-                    f'(last round still changed {sentinel[0]["_nc"]} labels); raise max_iter'
-                )
-            return res.where(F.col('_nc') < 0).select(
-                F.col('u').alias(id_col), F.col('label').alias('cluster_rep'))
+        return res.where(F.col('_nc') < 0).select(
+            F.col('u').alias(id_col), F.col('label').alias('cluster_rep'))
 
     edges = pairs.unionByName(pairs.select(F.col('v').alias('u'), F.col('u').alias('v'))).persist()
     labels = nodes_u.select('u', F.col('u').alias('label'))

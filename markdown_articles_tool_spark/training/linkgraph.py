@@ -65,20 +65,12 @@ LONG; the result is cast back to LONG (≤ SCALE by construction).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from .util import LOCAL_MAX_EDGES, fits_one_task
 
 _HOST_RE = r'^[a-zA-Z]+://([^/]+)'
 SCALE = 10 ** 12
-
-# Below this edge count the whole power iteration runs inside ONE
-# executor task (see pagerank_hosts) instead of K distributed rounds.
-# The threshold bounds the single task's memory and CPU (100k edges
-# x 10 iterations of big-int dict algebra is well under a second and a
-# few MB); a web-scale host graph (10^8 hosts / 10^9 edges) is far
-# above it and takes the distributed loop.
-_LOCAL_MAX_EDGES = int(os.environ.get('SPARK_GRAFT_PAGERANK_LOCAL_EDGES', '100000'))
 
 
 def host_of(col):
@@ -147,7 +139,7 @@ def _pagerank_partition(batches, iterations: int):
 
 def pagerank_hosts(edges: DataFrame, iterations: int = 10,
                    checkpoint_every: int = 1,
-                   local_max_edges: int | None = None) -> DataFrame:
+                   local_max_edges: int = LOCAL_MAX_EDGES) -> DataFrame:
     """(host, rank_units) after ``iterations`` integer power steps.
 
     One small job per iteration (eager ``localCheckpoint``, the same
@@ -188,13 +180,9 @@ def pagerank_hosts(edges: DataFrame, iterations: int = 10,
     # kernel replays the identical integer spec, so ranks are
     # bit-identical (fuzz-pinned against the distributed loop).  A
     # web-scale graph exceeds the threshold and takes the distributed
-    # rounds below, unchanged.
-    limit = _LOCAL_MAX_EDGES if local_max_edges is None else int(local_max_edges)
-    n_edges = edges.count()
-    if n_edges == 0:
-        edges.unpersist()
-        return edges.sparkSession.createDataFrame([], 'host string, rank_units long')
-    if n_edges <= limit:
+    # rounds below, unchanged.  ``local_max_edges <= 0`` forces the
+    # distributed loop.
+    if fits_one_task(edges, local_max_edges):
         ranks = (
             edges.repartition(1)
             .mapInPandas(lambda it: _pagerank_partition(it, iterations),

@@ -41,19 +41,12 @@ strictly less work.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-MAX_HOPS = 4
+from .util import LOCAL_MAX_EDGES, fits_one_task
 
-# Below this edge count the whole hop walk runs inside ONE executor
-# task (see resolve_redirect_chains) instead of max_hops rounds of
-# join+checkpoint jobs — the linkgraph/cluster size-adaptive
-# discipline.  A crawl-scale redirect table exceeds the bound and
-# takes the distributed hop loop.
-_WALK_LOCAL_MAX_EDGES = int(os.environ.get('SPARK_GRAFT_REDIRECT_LOCAL_EDGES', '100000'))
+MAX_HOPS = 4
 
 
 def _walk_partition(batches, max_hops: int):
@@ -116,7 +109,7 @@ def resolve_redirect_chains(
     redirects: DataFrame,
     responses: DataFrame,
     max_hops: int = MAX_HOPS,
-    local_max_edges: int | None = None,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(url, final_url, hops, state, final_status) per redirect
     capture — see module docstring for the frozen semantics.
@@ -148,12 +141,13 @@ def resolve_redirect_chains(
         )
     )
 
-    limit = _WALK_LOCAL_MAX_EDGES if local_max_edges is None else int(local_max_edges)
-    if edges.count() <= limit:
+    if fits_one_task(edges, local_max_edges):
         # size-adaptive fast path (the linkgraph/cluster discipline):
-        # the whole hop walk in ONE task over the checkpointed edge
-        # table — max_hops join+checkpoint rounds collapse to one job;
-        # the pandas kernel replays the identical relational steps.
+        # below the edge bound the whole hop walk runs in ONE task over
+        # the checkpointed edge table — max_hops join+checkpoint rounds
+        # collapse to one job; the pandas kernel replays the identical
+        # relational steps.  A crawl-scale redirect table exceeds the
+        # bound (and ``local_max_edges <= 0`` forces) the hop loop.
         final = edges.repartition(1).mapInPandas(
             lambda it: _walk_partition(it, max_hops),
             'start string, cur string, hops int, looped boolean',

@@ -4,6 +4,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: Default bound of the single-task fast paths (PageRank, connected
+#: components, redirect walk): 100k edges keep one task's memory and
+#: CPU small (10 PageRank iterations of big-int dict algebra run well
+#: under a second); a crawl-scale graph is far above it.
+LOCAL_MAX_EDGES = 100_000
+
+
+def fits_one_task(df: DataFrame, limit: int) -> bool:
+    """True when ``df`` has at most ``limit`` rows, so an iterative
+    operator may run its whole loop inside one executor task.
+
+    The probe is ``LIMIT limit+1`` then count: it stops reading once
+    the bound is exceeded, instead of counting a crawl-scale table.
+    ``limit <= 0`` disables the fast path (``0`` is the documented
+    value) and starts no Spark job, so even an empty table takes the
+    distributed path.
+    """
+    return limit > 0 and df.limit(limit + 1).count() <= limit
+
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Give CPU-heavy per-row stages cluster-width parallelism even

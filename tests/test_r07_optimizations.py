@@ -147,15 +147,13 @@ class TestCdxDomainBoundary:
         assert got_host == ['example,site1)/a'], got_host
 
 
-class TestCdxShardRowsClamp:
-    """``SPARK_GRAFT_CDX_SHARD_ROWS`` of 0 or below is clamped to 1 row
-    per shard instead of dividing by zero (or giving a negative shard
-    count) at the first default-sharded write."""
+class TestCdxDefaultShardCount:
+    """``write_cdx_index(n_shards=None)`` derives the shard count from
+    the row count: ``ceil(rows / _TARGET_ROWS_PER_SHARD)``, capped at
+    the cluster parallelism."""
 
-    @pytest.mark.parametrize('value', ['0', '-1'])
-    def test_non_positive_rows_per_shard(self, spark, tmp_path, monkeypatch, value):
-        import importlib
-
+    @pytest.mark.parametrize('rows_per_shard', [1, 2])
+    def test_size_derived_shard_count(self, spark, tmp_path, monkeypatch, rows_per_shard):
         from markdown_articles_tool_spark.sources import cdxindex
 
         cdx = spark.createDataFrame(
@@ -165,18 +163,11 @@ class TestCdxShardRowsClamp:
             'surt string, offset long, length long, addressable boolean, '
             'warc_date string',
         )
-        monkeypatch.setenv('SPARK_GRAFT_CDX_SHARD_ROWS', value)
-        try:
-            importlib.reload(cdxindex)
-            assert cdxindex._TARGET_ROWS_PER_SHARD == 1
-            path = str(tmp_path / 'index')
-            cdxindex.write_cdx_index(cdx, path)
-            # one row per shard, capped at the cluster parallelism
-            shards = spark.read.parquet(f'{path}/_boundaries').count()
-            assert shards == min(3, spark.sparkContext.defaultParallelism)
-        finally:
-            monkeypatch.delenv('SPARK_GRAFT_CDX_SHARD_ROWS')
-            importlib.reload(cdxindex)
+        monkeypatch.setattr(cdxindex, '_TARGET_ROWS_PER_SHARD', rows_per_shard)
+        path = str(tmp_path / 'index')
+        cdxindex.write_cdx_index(cdx, path)
+        shards = spark.read.parquet(f'{path}/_boundaries').count()
+        assert shards == min(-(-3 // rows_per_shard), spark.sparkContext.defaultParallelism)
 
 
 class TestClosestDateEdgeCases:
@@ -224,8 +215,37 @@ class TestClosestDateEdgeCases:
         assert rows[0]['ts_diff'] == 0
 
 
+class TestFitsOneTask:
+    """The one size gate of the single-task fast paths: at most
+    ``limit`` rows fit; ``limit <= 0`` disables the gate without
+    starting a Spark job, so an empty table is no exception."""
+
+    @pytest.mark.parametrize('limit', [-1, 0, 1, 5])
+    def test_boundaries(self, spark, limit):
+        from markdown_articles_tool_spark.training.util import fits_one_task
+
+        for n in sorted({0, max(limit, 0), limit + 1}):
+            assert fits_one_task(spark.range(n), limit) == (0 < limit and n <= limit), n
+
+    def test_disabled_gate_starts_no_job(self, spark):
+        from markdown_articles_tool_spark.training.util import fits_one_task
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        jobs = {}
+        for limit in (0, 1):
+            sc.setJobGroup(f'gate-{limit}', 'fits_one_task probe')
+            try:
+                fits_one_task(spark.range(0), limit)
+            finally:
+                sc.setJobGroup(None, None)
+            jobs[limit] = len(tracker.getJobIdsForGroup(f'gate-{limit}') or [])
+        # the enabled gate's probe is seen, so 0 for the disabled one counts
+        assert jobs[0] == 0 and jobs[1] >= 1, jobs
+
+
 class TestPagerankSingleTaskFastPath:
-    """Session-3 change: below ``_LOCAL_MAX_EDGES`` the whole power
+    """Session-3 change: below ``LOCAL_MAX_EDGES`` the whole power
     iteration runs inside ONE mapInPandas task (no per-iteration job
     scheduling); the kernel replays the identical integer spec, so the
     two paths must be bit-identical on any graph."""
@@ -236,13 +256,16 @@ class TestPagerankSingleTaskFastPath:
         from markdown_articles_tool_spark.training.linkgraph import pagerank_hosts
 
         rng = random.Random(1234)
+        graphs = []
         for _ in range(3):
             hosts = [f'h{i}.example' for i in range(rng.randint(2, 30))]
             pairs = set()
             for _e in range(rng.randint(1, 90)):
                 s, d = rng.sample(hosts, 2)
                 pairs.add((s, d))
-            rows = [(s, d, rng.randint(1, 9)) for (s, d) in pairs]
+            graphs.append([(s, d, rng.randint(1, 9)) for (s, d) in pairs])
+        graphs.append([])  # empty edge table: no ranks on either path
+        for rows in graphs:
             df = spark.createDataFrame(
                 rows, 'src_host string, dst_host string, n_links long')
             fast = {r['host']: r['rank_units']
@@ -252,6 +275,7 @@ class TestPagerankSingleTaskFastPath:
                     for r in pagerank_hosts(df, iterations=6,
                                             local_max_edges=0).collect()}
             assert fast == slow
+        assert fast == {}
 
     def test_zero_out_weight_source_matches_distributed_loop(self, spark):
         """A source whose out-weights sum to 0 contributes nothing on
@@ -291,7 +315,8 @@ class TestPagerankSingleTaskFastPath:
         no per-iteration join/agg chain; pin it via the plan string of
         the pre-checkpoint frame shape (the public result is already
         materialized, so pin the job count instead: building ranks
-        costs exactly 2 jobs — edges.count + the checkpoint)."""
+        costs the size probe + the checkpoint, whatever the iteration
+        count)."""
         from markdown_articles_tool_spark.training.linkgraph import pagerank_hosts
 
         df = spark.createDataFrame(
@@ -338,6 +363,7 @@ class TestConnectedComponentsSingleTaskFastPath:
         import random
 
         rng = random.Random(4321)
+        graphs = []
         for _ in range(3):
             node_rows = rng.sample(range(500), rng.randint(2, 40))
             pairs_rows = [tuple(rng.sample(node_rows, 2))
@@ -346,11 +372,16 @@ class TestConnectedComponentsSingleTaskFastPath:
             # same way the left joins drop them
             pairs_rows.append((node_rows[0], 9001))
             pairs_rows.append((9002, node_rows[0]))
+            graphs.append((pairs_rows, node_rows))
+        # no pairs over a non-empty node set: every node is a singleton
+        graphs.append(([], [3, 1, 2]))
+        for pairs_rows, node_rows in graphs:
             for sc in (True, False):
                 fast = self._run(spark, pairs_rows, node_rows, shortcut=sc)
                 slow = self._run(spark, pairs_rows, node_rows, shortcut=sc,
                                  local_max_edges=0)
                 assert fast == slow
+        assert fast == ('ok', {(1, 1), (2, 2), (3, 3)})
 
     def test_duplicate_node_ids_match_distributed_loop(self, spark):
         """A node id listed more than once yields ONE output row on both
@@ -411,6 +442,7 @@ class TestRedirectWalkSingleTaskFastPath:
                 (r['url'], r['final_url'], r['hops'], r['state'],
                  r['final_status']) for r in out)
 
+        cases = []
         for _ in range(3):
             urls = [f'https://s.example/u{i}'
                     for i in range(rng.randint(3, 20))]
@@ -423,6 +455,9 @@ class TestRedirectWalkSingleTaskFastPath:
                              'https://off.example/x'])))
             rows_resp = [(u, rng.choice([200, 301, 404]))
                          for u in urls if rng.random() < 0.7]
+            cases.append((rows_red, rows_resp))
+        cases.append(([], cases[0][1]))  # no redirects at all
+        for rows_red, rows_resp in cases:
             red = spark.createDataFrame(rows_red, 'url string, location string')
             resp = spark.createDataFrame(rows_resp, 'url string, http_status int')
             for mh in (2, 4):
@@ -430,3 +465,4 @@ class TestRedirectWalkSingleTaskFastPath:
                 # local_max_edges=-1 forces the distributed hop loop
                 slow = run(red, resp, mh, local_max_edges=-1)
                 assert fast == slow
+        assert fast == collections.Counter()
