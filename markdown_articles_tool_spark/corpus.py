@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import hashlib
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from .oracle import Asset
 
@@ -307,11 +307,6 @@ def docs_list(n: int, start: int = 0) -> List[Tuple[str, str]]:
     return [(doc_url(i), doc_text(i)) for i in range(start, start + n)]
 
 
-def pages_pdf_iter(indices) -> Iterator[Tuple[str, datetime, bytes, str, str]]:
-    for i in indices:
-        yield doc_row(int(i))
-
-
 def lzw_encode(data: bytes) -> bytes:
     """Minimal TIFF/PDF LZWDecode-compatible encoder (EarlyChange=1,
     MSB-first 9-12 bit codes, leading clear, trailing EOD) — used to
@@ -493,15 +488,13 @@ PDFS_SCHEMA = 'url string, pdf binary'
 
 def pdfs_df(spark, n: int, partitions: int | None = None):
     """Distributed generation of a (url, pdf) table of synthetic PDFs."""
-    import pandas as pd
+    from .operators.udfs import map_rows
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [(doc_url(int(i)), doc_pdf(int(i))) for i in pdf['id']]
-            yield pd.DataFrame(rows, columns=['url', 'pdf'])
+    def gen(i):
+        yield doc_url(i), doc_pdf(i)
 
     rng = spark.range(0, n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    return rng.mapInPandas(gen, schema=PDFS_SCHEMA)
+    return map_rows(rng, ['id'], gen, PDFS_SCHEMA)
 
 
 # ---------------------------------------------------------------- warc corpus
@@ -750,19 +743,16 @@ def warc_files_df(spark, n: int, partitions: int | None = None,
     """Distributed generation of the (file_name, data) WARC-blob table
     — the same shape ``spark.read.format('binaryFile')`` yields off a
     crawl bucket (path, content)."""
-    import pandas as pd
+    from .operators.udfs import map_rows
 
     n_files = (n + docs_per_file - 1) // docs_per_file
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [(warc_file_name(int(f)), warc_file_bytes(int(f), n, docs_per_file))
-                    for f in pdf['id']]
-            yield pd.DataFrame(rows, columns=['file_name', 'data'])
+    def gen(f):
+        yield warc_file_name(f), warc_file_bytes(f, n, docs_per_file)
 
     rng = spark.range(0, n_files,
                       numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    return rng.mapInPandas(gen, schema=WARCS_SCHEMA)
+    return map_rows(rng, ['id'], gen, WARCS_SCHEMA)
 
 
 # ---------------------------------------------------------------- robots corpus
@@ -915,15 +905,13 @@ PAGES_SCHEMA = 'url string, warc_ts timestamp, html binary, text string, lang st
 
 def pages_df(spark, n: int, partitions: int | None = None, fat: bool = False):
     """Distributed generation of the pages table (input_hint shape)."""
-    import pandas as pd
+    from .operators.udfs import map_rows
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [doc_row(int(i), fat) for i in pdf['id']]
-            yield pd.DataFrame(rows, columns=['url', 'warc_ts', 'html', 'text', 'lang'])
+    def gen(i):
+        yield doc_row(i, fat)
 
     rng = spark.range(0, n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
-    return rng.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(rng, ['id'], gen, PAGES_SCHEMA)
 
 
 # ------------------------------------------------------------- PII plant

@@ -26,19 +26,27 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .udfs import row_batches
+
 FETCH_SCHEMA = (
     'fetch_key string, final_url string, content binary, content_type string, '
     'content_disposition string, fetch_status int'
 )
+# its column names, read without a Spark session: the fetchers also run
+# as plain pandas functions
+FETCH_COLUMNS = [field.split()[0] for field in FETCH_SCHEMA.split(', ')]
 
 # fetch + per-URL derivations in ONE python crossing (see derive_fetched)
 FETCH_DERIVED_SCHEMA = FETCH_SCHEMA + ', sha_hex string, filename_remote string'
 
 Fetcher = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 
-# sentinel mirrored from operators.udfs: the reference raises KeyError
-# on a missing content-type header (www_tools.py:108)
+# the reference raises KeyError on a missing content-type header
+# (www_tools.py:108) → the link becomes an 'error' row, which is fatal
+# unless skip_all_errors (pipeline.extract_pass_links)
 FILENAME_KEYERROR = '\x00\x00content-type-keyerror'
+
+_HOST_RE = r'^[a-zA-Z]+://([^/]+)'
 
 
 def derive_fetched(fetcher: Fetcher) -> Fetcher:
@@ -83,25 +91,54 @@ def derive_fetched(fetcher: Fetcher) -> Fetcher:
     return fetch_and_derive
 
 
-def model_fetcher(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic modeled GET keyed by URL (corpus.model_asset)."""
+def _model_get(key: str) -> Iterator[tuple]:
+    """One modeled GET (corpus.model_asset) as its FETCH_COLUMNS row."""
     from ..corpus import model_asset
 
-    for pdf in batches:
-        rows = []
-        for key in pdf['fetch_key']:
-            a = model_asset(key)
-            if a is None:
-                rows.append((key, None, None, None, None, 599))
-            else:
-                rows.append(
-                    (key, a.final_url or key, a.content, a.content_type,
-                     a.content_disposition, a.status)
-                )
-        yield pd.DataFrame(
-            rows, columns=['fetch_key', 'final_url', 'content', 'content_type',
-                         'content_disposition', 'fetch_status']
+    a = model_asset(key)
+    if a is None:
+        yield key, None, None, None, None, 599
+    else:
+        yield key, a.final_url or key, a.content, a.content_type, a.content_disposition, a.status
+
+
+def model_fetcher(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Deterministic modeled GET keyed by URL (corpus.model_asset)."""
+    return row_batches(_model_get, FETCH_COLUMNS)(batches)
+
+
+def _host_paced(make_get: Callable[[], Callable[[str], Iterator[tuple]]],
+                per_host_interval: float) -> Fetcher:
+    """The politeness loop of the polite modeled and the live fetcher:
+    each batch's keys are fetched grouped by host, hosts in alphabetical
+    order (keys without a host last), and consecutive GETs to one host
+    are spaced at least ``per_host_interval`` seconds apart, across
+    batches too.  ``make_get()`` runs once per task and returns the
+    per-key GET, which yields the key's FETCH_COLUMNS row."""
+
+    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import time
+
+        get = make_get()
+        last_hit: dict = {}  # host -> monotonic time of last GET
+
+        def paced_get(key, host):
+            if per_host_interval > 0:
+                prev = last_hit.get(host)
+                now = time.monotonic()
+                if prev is not None and now - prev < per_host_interval:
+                    time.sleep(per_host_interval - (now - prev))
+                last_hit[host] = time.monotonic()
+            yield from get(key)
+
+        by_host = (
+            pdf.assign(_host=pdf['fetch_key'].str.extract(_HOST_RE)[0])
+            .sort_values('_host', kind='stable')[['fetch_key', '_host']]
+            for pdf in batches
         )
+        yield from row_batches(paced_get, FETCH_COLUMNS)(by_host)
+
+    return fetch
 
 
 def polite_model_fetcher(per_host_interval: float = 0.0) -> Fetcher:
@@ -112,58 +149,20 @@ def polite_model_fetcher(per_host_interval: float = 0.0) -> Fetcher:
     salt-by-host skew behavior is MEASURABLE offline (bench.py --skew):
     a politeness-constrained fetch is exactly where hot-host skew
     bites, and the sandbox has no network to show it with."""
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        from ..corpus import model_asset
-
-        last_hit: dict = {}
-        for pdf in batches:
-            pdf = pdf.assign(_host=pdf['fetch_key'].str.extract(r'^[a-zA-Z]+://([^/]+)')[0])
-            rows = []
-            for _host, grp in pdf.groupby('_host', dropna=False, sort=True):
-                for key in grp['fetch_key']:
-                    if per_host_interval > 0:
-                        prev = last_hit.get(_host)
-                        now = time.monotonic()
-                        if prev is not None and now - prev < per_host_interval:
-                            time.sleep(per_host_interval - (now - prev))
-                        last_hit[_host] = time.monotonic()
-                    a = model_asset(key)
-                    if a is None:
-                        rows.append((key, None, None, None, None, 599))
-                    else:
-                        rows.append(
-                            (key, a.final_url or key, a.content, a.content_type,
-                             a.content_disposition, a.status)
-                        )
-            yield pd.DataFrame(
-                rows, columns=['fetch_key', 'final_url', 'content', 'content_type',
-                               'content_disposition', 'fetch_status']
-            )
-
-    return fetch
+    return _host_paced(lambda: _model_get, per_host_interval)
 
 
 def local_store_fetcher(local_assets: dict) -> Fetcher:
     """Local-file reads modeled from an in-memory dict (S5)."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key in pdf['fetch_key']:
-                content = local_assets.get(key)
-                if content is None:
-                    rows.append((key, None, None, None, None, 404))
-                else:
-                    rows.append((key, key, content, None, None, 200))
-            yield pd.DataFrame(
-                rows, columns=['fetch_key', 'final_url', 'content', 'content_type',
-                         'content_disposition', 'fetch_status']
-            )
+    def local_get(key):
+        content = local_assets.get(key)
+        if content is None:
+            yield key, None, None, None, None, 404
+        else:
+            yield key, key, content, None, None, 200
 
-    return fetch
+    return row_batches(local_get, FETCH_COLUMNS)
 
 
 def live_fetcher(timeout: float | None = None, per_host_interval: float = 0.0) -> Fetcher:
@@ -183,9 +182,7 @@ def live_fetcher(timeout: float | None = None, per_host_interval: float = 0.0) -
     serialize cross-host throughput within a partition more than the
     grouping already does)."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
+    def make_get():
         import requests
 
         headers = {
@@ -193,42 +190,27 @@ def live_fetcher(timeout: float | None = None, per_host_interval: float = 0.0) -
             'Gecko/20100101 Firefox/96.0'
         }
         session = requests.Session()
-        last_hit: dict = {}  # host -> monotonic time of last GET (across batches)
-        for pdf in batches:
-            # group by host for connection reuse / politeness
-            pdf = pdf.assign(_host=pdf['fetch_key'].str.extract(r'^[a-zA-Z]+://([^/]+)')[0])
-            rows = []
-            for _host, grp in pdf.groupby('_host', dropna=False, sort=True):
-                for key in grp['fetch_key']:
-                    if per_host_interval > 0:
-                        prev = last_hit.get(_host)
-                        now = time.monotonic()
-                        if prev is not None and now - prev < per_host_interval:
-                            time.sleep(per_host_interval - (now - prev))
-                        last_hit[_host] = time.monotonic()
-                    try:
-                        try:
-                            resp = session.get(key, allow_redirects=True, timeout=timeout, headers=headers)
-                        except requests.exceptions.SSLError:
-                            resp = session.get(
-                                key, allow_redirects=True, verify=False, timeout=timeout, headers=headers
-                            )
-                        if not resp.ok:
-                            rows.append((key, None, None, None, None, resp.status_code))
-                        else:
-                            rows.append(
-                                (key, resp.url, resp.content,
-                                 resp.headers.get('content-type'),
-                                 resp.headers.get('content-disposition'), 200)
-                            )
-                    except Exception:
-                        rows.append((key, None, None, None, None, 599))
-            yield pd.DataFrame(
-                rows, columns=['fetch_key', 'final_url', 'content', 'content_type',
-                         'content_disposition', 'fetch_status']
-            )
 
-    return fetch
+        def http_get(key):
+            try:
+                try:
+                    resp = session.get(key, allow_redirects=True, timeout=timeout, headers=headers)
+                except requests.exceptions.SSLError:
+                    resp = session.get(
+                        key, allow_redirects=True, verify=False, timeout=timeout, headers=headers
+                    )
+                if not resp.ok:
+                    row = (key, None, None, None, None, resp.status_code)
+                else:
+                    row = (key, resp.url, resp.content, resp.headers.get('content-type'),
+                           resp.headers.get('content-disposition'), 200)
+            except Exception:
+                row = (key, None, None, None, None, 599)
+            yield row
+
+        return http_get
+
+    return _host_paced(make_get, per_host_interval)
 
 
 def fetch_distinct(
@@ -251,7 +233,7 @@ def fetch_distinct(
     keys = links.select(F.col(key_col).alias('fetch_key')).where(F.col('fetch_key').isNotNull()).distinct()
     p = parallelism or spark.sparkContext.defaultParallelism
     if salt_by_host:
-        host = F.regexp_extract('fetch_key', r'^[a-zA-Z]+://([^/]+)', 1)
+        host = F.regexp_extract('fetch_key', _HOST_RE, 1)
         salt = F.pmod(F.xxhash64('fetch_key'), F.lit(4))
         keys = keys.repartition(p, F.xxhash64(host), salt)
     else:

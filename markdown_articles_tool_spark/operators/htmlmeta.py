@@ -7,12 +7,10 @@ feed the host link graph + PageRank (training/linkgraph.py)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.htmlmeta import extract_meta, extract_outlinks
+from .udfs import map_rows
 
 META_SCHEMA = (
     'url string, title string, meta_description string, canonical string, '
@@ -22,32 +20,17 @@ OUTLINKS_SCHEMA = 'url string, ord int, href string, abs_url string, anchor stri
 
 
 def extract_page_meta(pages: DataFrame, url_col: str = 'url', html_col: str = 'html') -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                title, desc, canon, og, noidx, nofol = extract_meta(html)
-                rows.append((url, title, desc, canon, og, noidx, nofol))
-            yield pd.DataFrame(
-                rows,
-                columns=['url', 'title', 'meta_description', 'canonical',
-                         'og_title', 'robots_noindex', 'robots_nofollow'],
-            )
+    def page_meta(url, html):
+        yield (url, *extract_meta(html))
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=META_SCHEMA)
+    return map_rows(pages, [url_col, html_col], page_meta, META_SCHEMA)
 
 
 def extract_page_outlinks(
     pages: DataFrame, url_col: str = 'url', html_col: str = 'html'
 ) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for ord_, href, abs_url, anchor in extract_outlinks(url, html):
-                    rows.append((url, ord_, href, abs_url, anchor))
-            yield pd.DataFrame(
-                rows, columns=['url', 'ord', 'href', 'abs_url', 'anchor']
-            )
+    def page_outlinks(url, html):
+        for rec in extract_outlinks(url, html):
+            yield (url, *rec)
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=OUTLINKS_SCHEMA)
+    return map_rows(pages, [url_col, html_col], page_outlinks, OUTLINKS_SCHEMA)

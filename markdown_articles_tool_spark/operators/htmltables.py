@@ -6,25 +6,17 @@ narrow rows out; embarrassingly parallel over input splits."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.htmltables import extract_tables
+from .udfs import map_rows
 
 TABLES_SCHEMA = 'url string, table_idx int, row_idx int, col_idx int, cell string'
 
 
 def extract_html_tables(pages: DataFrame, url_col: str = 'url', html_col: str = 'html') -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for t, r, c, cell in extract_tables(html):
-                    rows.append((url, t, r, c, cell))
-            yield pd.DataFrame(
-                rows, columns=['url', 'table_idx', 'row_idx', 'col_idx', 'cell']
-            )
+    def html_tables(url, html):
+        for cell in extract_tables(html):
+            yield (url, *cell)
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=TABLES_SCHEMA)
+    return map_rows(pages, [url_col, html_col], html_tables, TABLES_SCHEMA)

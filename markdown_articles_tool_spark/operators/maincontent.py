@@ -15,15 +15,12 @@ column, not the html.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import maincontent as mc
+from .udfs import map_rows
 
 MAIN_CONTENT_SCHEMA = 'url string, main_text string, n_blocks int, n_kept int'
-MAIN_CONTENT_COLUMNS = ['url', 'main_text', 'n_blocks', 'n_kept']
 SPANS_SCHEMA = (
     'url string, ord int, tag string, n_chars int, link_density double, '
     'kept boolean, start long, end long'
@@ -39,12 +36,10 @@ def main_content_row(url: str, html: bytes) -> tuple:
 def extract_main_content(pages: DataFrame, url_col: str = 'url', html_col: str = 'html') -> DataFrame:
     """(url, main_text, n_blocks, n_kept) — one row per page."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [main_content_row(url, html) for url, html in zip(pdf[url_col], pdf[html_col])]
-            yield pd.DataFrame(rows, columns=MAIN_CONTENT_COLUMNS)
+    def main_content(url, html):
+        yield main_content_row(url, html)
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=MAIN_CONTENT_SCHEMA)
+    return map_rows(pages, [url_col, html_col], main_content, MAIN_CONTENT_SCHEMA)
 
 
 COMBINED_SCHEMA = (
@@ -62,35 +57,20 @@ def extract_main_content_full(
     would pay it twice).  Persist this frame, project main_text and
     explode spans from the same materialization."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                blocks = mc.extract_blocks(html)
-                rows.append(
-                    (url, mc.main_text(blocks), len(blocks),
-                     sum(1 for b in blocks if b.kept), mc.spans(blocks))
-                )
-            yield pd.DataFrame(
-                rows, columns=['url', 'main_text', 'n_blocks', 'n_kept', 'spans']
-            )
+    def main_content_full(url, html):
+        blocks = mc.extract_blocks(html)
+        yield (url, mc.main_text(blocks), len(blocks),
+               sum(1 for b in blocks if b.kept), mc.spans(blocks))
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=COMBINED_SCHEMA)
+    return map_rows(pages, [url_col, html_col], main_content_full, COMBINED_SCHEMA)
 
 
 def extract_content_spans(pages: DataFrame, url_col: str = 'url', html_col: str = 'html') -> DataFrame:
     """Per-block span rows (url, ord, tag, n_chars, link_density, kept,
     start, end); offsets index into the page's main_text."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for row in mc.spans(mc.extract_blocks(html)):
-                    rows.append((url, *row))
-            yield pd.DataFrame(
-                rows,
-                columns=['url', 'ord', 'tag', 'n_chars', 'link_density', 'kept', 'start', 'end'],
-            )
+    def content_spans(url, html):
+        for span in mc.spans(mc.extract_blocks(html)):
+            yield (url, *span)
 
-    return pages.select(url_col, html_col).mapInPandas(run, schema=SPANS_SCHEMA)
+    return map_rows(pages, [url_col, html_col], content_spans, SPANS_SCHEMA)

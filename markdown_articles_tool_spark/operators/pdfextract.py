@@ -9,12 +9,10 @@ scan, no shuffle, embarrassingly parallel over input splits.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import pdftext as pt
+from .udfs import map_rows
 
 PDF_TEXT_SCHEMA = 'url string, text string, n_streams int, n_blocks int'
 PDF_SPANS_SCHEMA = 'url string, stream_idx int, block_idx int, n_chars int'
@@ -23,28 +21,18 @@ PDF_SPANS_SCHEMA = 'url string, stream_idx int, block_idx int, n_chars int'
 def extract_pdf_text(df: DataFrame, url_col: str = 'url', pdf_col: str = 'pdf') -> DataFrame:
     """(url, text, n_streams, n_blocks) — one row per document."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, content in zip(pdf[url_col], pdf[pdf_col]):
-                blocks = pt.extract_pdf_blocks(content)
-                rows.append(
-                    (url, pt.pdf_text(blocks), len({b[0] for b in blocks}), len(blocks))
-                )
-            yield pd.DataFrame(rows, columns=['url', 'text', 'n_streams', 'n_blocks'])
+    def pdf_text(url, content):
+        blocks = pt.extract_pdf_blocks(content)
+        yield url, pt.pdf_text(blocks), len({b[0] for b in blocks}), len(blocks)
 
-    return df.select(url_col, pdf_col).mapInPandas(run, schema=PDF_TEXT_SCHEMA)
+    return map_rows(df, [url_col, pdf_col], pdf_text, PDF_TEXT_SCHEMA)
 
 
 def extract_pdf_spans(df: DataFrame, url_col: str = 'url', pdf_col: str = 'pdf') -> DataFrame:
     """Per-block rows (url, stream_idx, block_idx, n_chars)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, content in zip(pdf[url_col], pdf[pdf_col]):
-                for si, bi, nc in pt.pdf_spans(pt.extract_pdf_blocks(content)):
-                    rows.append((url, si, bi, nc))
-            yield pd.DataFrame(rows, columns=['url', 'stream_idx', 'block_idx', 'n_chars'])
+    def pdf_spans(url, content):
+        for span in pt.pdf_spans(pt.extract_pdf_blocks(content)):
+            yield (url, *span)
 
-    return df.select(url_col, pdf_col).mapInPandas(run, schema=PDF_SPANS_SCHEMA)
+    return map_rows(df, [url_col, pdf_col], pdf_spans, PDF_SPANS_SCHEMA)

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.robots import is_allowed, parse_robots, url_path
+from .udfs import map_rows
 
 ROBOTS_RULES_SCHEMA = 'host string, group_agent string, ord int, verb string, value string'
 
@@ -36,17 +37,11 @@ def extract_robots_rules(robots: DataFrame, host_col: str = 'host',
     """(host, group_agent, ord, verb, value) records per robots file,
     in file order — one mapInPandas pass, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, txt in zip(pdf[host_col], pdf[txt_col]):
-                for rec in parse_robots(txt):
-                    rows.append((host, *rec))
-            yield pd.DataFrame(
-                rows, columns=['host', 'group_agent', 'ord', 'verb', 'value']
-            )
+    def robots_rules(host, txt):
+        for rec in parse_robots(txt):
+            yield (host, *rec)
 
-    return robots.select(host_col, txt_col).mapInPandas(run, schema=ROBOTS_RULES_SCHEMA)
+    return map_rows(robots, [host_col, txt_col], robots_rules, ROBOTS_RULES_SCHEMA)
 
 
 def crawl_allowed(outlinks: DataFrame, robots: DataFrame,
@@ -67,7 +62,7 @@ def crawl_allowed(outlinks: DataFrame, robots: DataFrame,
     rob = robots.select(F.lower(F.col('host')).alias('_rhost'), 'robots_txt')
     joined = links.join(F.broadcast(rob), links.dst_host == rob._rhost, 'left')
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def crawl_gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict = {}
         for pdf in batches:
             allowed = []
@@ -84,4 +79,4 @@ def crawl_allowed(outlinks: DataFrame, robots: DataFrame,
             yield out
 
     return joined.select('url', 'ord', 'abs_url', 'dst_host', 'robots_txt') \
-        .mapInPandas(run, schema=CRAWL_ALLOWED_SCHEMA)
+        .mapInPandas(crawl_gate, schema=CRAWL_ALLOWED_SCHEMA)

@@ -7,12 +7,10 @@ per file either way."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.sitemap import sitemap_entries
+from .udfs import map_rows
 
 SITEMAP_ENTRIES_SCHEMA = (
     'host string, ord int, kind string, loc string, lastmod string, '
@@ -22,16 +20,8 @@ SITEMAP_ENTRIES_SCHEMA = (
 
 def extract_sitemap_entries(sitemaps: DataFrame, host_col: str = 'host',
                             xml_col: str = 'sitemap_xml') -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, xml in zip(pdf[host_col], pdf[xml_col]):
-                for rec in sitemap_entries(xml):
-                    rows.append((host, *rec))
-            yield pd.DataFrame(
-                rows, columns=['host', 'ord', 'kind', 'loc', 'lastmod',
-                               'changefreq', 'priority']
-            )
+    def sitemap_records(host, xml):
+        for rec in sitemap_entries(xml):
+            yield (host, *rec)
 
-    return sitemaps.select(host_col, xml_col).mapInPandas(
-        run, schema=SITEMAP_ENTRIES_SCHEMA)
+    return map_rows(sitemaps, [host_col, xml_col], sitemap_records, SITEMAP_ENTRIES_SCHEMA)

@@ -6,16 +6,25 @@ UDFs anywhere — input_hint mandate, BASELINE.json:16).  Each UDF is a
 thin vectorized wrapper over ``markdown_articles_tool_spark.core``, so
 the Spark pipeline and the sequential oracle share one semantic
 implementation.
+
+Operators that turn one input record into zero or more output rows
+(page → main content, archive blob → WARC records, fetch key → fetched
+row, ...) are one ``mapInPandas`` each, built by ``map_rows``: the
+operator supplies only its per-record function and its DDL schema.
+``row_batches`` is the same Arrow-batch loop without Spark, for
+callers that already hold the batch iterator (the fetchers).
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     IntegerType,
     StringType,
     StructField,
@@ -24,7 +33,39 @@ from pyspark.sql.types import (
 
 from ..core import mdparse
 from ..core.pathalgebra import PathConfig, get_document_img_path, get_real_path, image_local_url
-from ..core.wwwtools import filename_from_url, guess_mime_type
+from ..core.wwwtools import guess_mime_type
+
+RowFn = Callable[..., Iterable[tuple]]
+
+
+def row_batches(fn: RowFn, names: Sequence[str]) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The Arrow-batch loop of ``map_rows``, without Spark: a
+    ``mapInPandas`` function that calls ``fn(*values)`` on every row of
+    every input batch and yields one frame per batch of the tuples it
+    yields, under ``names`` (an empty batch yields an empty frame with
+    those columns).  It carries ``fn``'s name, which is what the
+    ``MapInPandas`` plan node prints."""
+
+    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for values in pdf.itertuples(index=False, name=None) for out in fn(*values)],
+                columns=names,
+            )
+
+    batches_fn.__name__ = batches_fn.__qualname__ = fn.__name__
+    return batches_fn
+
+
+def map_rows(df: DataFrame, cols: Sequence[str], fn: RowFn, schema: str) -> DataFrame:
+    """One ``mapInPandas`` over ``df.select(*cols)``: ``fn`` gets each
+    row's values in ``cols`` order and yields output tuples in the
+    order of the DDL ``schema``.  The output column names are read from
+    the schema once, on the driver; the plan node is named after
+    ``fn``."""
+    struct = DataType.fromDDL(schema)
+    return df.select(*cols).mapInPandas(row_batches(fn, struct.names), schema=struct)
+
 
 LINK_STRUCT = StructType(
     [
@@ -107,32 +148,6 @@ def mime_gate_col(download_url):
         .when(last.isin(*encodings), F.lower(prev).isin(*direct))
         .otherwise(ll.isin(*direct))
     )
-
-
-# sentinel: the reference raises KeyError on a missing content-type
-# header (www_tools.py:108) → the link becomes an 'error' row, which is
-# fatal unless skip_all_errors
-FILENAME_KEYERROR = '\x00\x00content-type-keyerror'
-
-
-@pandas_udf(StringType())
-def remote_filename_udf(
-    final_url: pd.Series, content_type: pd.Series, content_disposition: pd.Series
-) -> pd.Series:
-    """F7: remote filename from response URL + content-type, with the
-    content-disposition ``filename=`` fallback branch
-    (www_tools.py:80-116).  Runs on the *fetched* side — once per
-    distinct URL, not once per link occurrence."""
-    out = []
-    for u, ct, cd in zip(final_url, content_type, content_disposition):
-        if u is None:
-            out.append(None)
-            continue
-        try:
-            out.append(filename_from_url(u, ct, cd))
-        except KeyError:
-            out.append(FILENAME_KEYERROR)
-    return pd.Series(out, dtype=object)
 
 
 @pandas_udf(StringType())
@@ -253,49 +268,6 @@ def make_mapping_udf(strict_duplicate_assert: bool, skip_all_errors: bool, path_
         return pd.Series(out, dtype=object)
 
     return mapping_udf
-
-
-def make_rewrite_udf(strict_duplicate_assert: bool, skip_all_errors: bool, path_cfg: PathConfig = None):
-    """R1 + A1/A5: per-document fold + ordered cascading rewrite.
-
-    The fold itself is ``core.docfold``; this wrapper adapts the Spark
-    struct rows and enforces the two failure semantics: the duplicate-
-    URL assert (image_downloader.py:116) and fail-on-error when
-    ``skip_all_errors`` is unset (image_downloader.py:152-161).
-    """
-    from ..core import docfold
-
-    @pandas_udf(StringType())
-    def rewrite_udf(text: pd.Series, recs: pd.Series) -> pd.Series:
-        out = []
-        for t, rs in zip(text, recs):
-            if rs is None or len(rs) == 0:
-                out.append(t)
-                continue
-            records = []
-            seen_ok = set()
-            for r in sorted(rs, key=lambda r: r['ord']):
-                if strict_duplicate_assert and r['src'] in seen_ok:
-                    raise AssertionError(f'BUG: already downloaded image "{r["src"]}"...')
-                if not skip_all_errors and r['status'] == docfold.ERROR:
-                    raise OSError(f'image fetch failed for "{r["src"]}" (skip_all_errors unset)')
-                if r['status'] == docfold.OK:
-                    seen_ok.add(r['src'])
-                records.append(
-                    docfold.LinkRecord(
-                        ord=r['ord'],
-                        src=r['src'],
-                        status=r['status'],
-                        dedup_path=r['dedup_path'],
-                        doc_path=r['doc_path'],
-                        doc_path_posix=r['doc_path_posix'],
-                        filename=r['filename'],
-                    )
-                )
-            out.append(docfold.fold_and_rewrite(t, records, path_cfg))
-        return pd.Series(out, dtype=object)
-
-    return rewrite_udf
 
 
 def is_url_col(c):

@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .core.linkflow import DedupVariant, TransformConfig
 from .operators import udfs
-from .operators.fetch import Fetcher, fetch_distinct, local_store_fetcher, model_fetcher
+from .operators.fetch import (
+    FILENAME_KEYERROR, Fetcher, fetch_distinct, local_store_fetcher, model_fetcher)
 from .operators.udfs import base_url_col, is_url_col
 
 
@@ -49,7 +50,6 @@ class PassResult:
     links_audit: DataFrame       # url, pass, ord, src, status, fetch_key, real_path
     images_out: DataFrame        # real_path, content
     dedup_registrations: Optional[DataFrame]  # sha_hex, key, filename (CONTENT_HASH only)
-    cached: tuple = ()           # persisted intermediates; unpersist via cleanup()
 
 
 @dataclass
@@ -217,7 +217,7 @@ def extract_pass_links(
         'status',
         F.when(F.col('status0').isNotNull(), F.col('status0'))
         .when(F.col('sha_hex').isNull() | (F.col('fetch_status') >= 400), F.lit('error'))
-        .when(F.col('filename0') == udfs.FILENAME_KEYERROR, F.lit('error'))
+        .when(F.col('filename0') == FILENAME_KEYERROR, F.lit('error'))
         .when(F.col('filename0').isNull(), F.lit('no_filename'))
         .otherwise(F.lit('ok')),
     )
@@ -248,7 +248,6 @@ def finish_pass(
     cfg: TransformConfig,
     pass_idx: int = 0,
     dedup_state: Optional[DataFrame] = None,
-    cached: tuple = (),
 ) -> PassResult:
     """Global half of one transformer pass: cluster-wide dedup winners,
     path algebra, per-document fold + rewrite, and both sinks.
@@ -372,7 +371,7 @@ def finish_pass(
         'sha_hex',
     )
 
-    return PassResult(docs_out, links_audit, images_out, dedup_registrations, cached=cached)
+    return PassResult(docs_out, links_audit, images_out, dedup_registrations)
 
 
 def first_pass_wins(images: DataFrame) -> DataFrame:
@@ -495,10 +494,10 @@ def transform_documents(
         links, fetched, pass_cached = extract_pass_links(
             cur, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
         )
-        res = finish_pass(cur, links, fetched, cfg, pass_idx=i, dedup_state=dedup_state, cached=pass_cached)
+        res = finish_pass(cur, links, fetched, cfg, pass_idx=i, dedup_state=dedup_state)
         audits.append(res.links_audit)
         images.append(res.images_out.withColumn('_pass', F.lit(i)))
-        cached.extend(res.cached)
+        cached.extend(pass_cached)
         if res.dedup_registrations is not None:
             dedup_state = res.dedup_registrations
         cur = res.docs_out.withColumnRenamed('text_out', 'text')

@@ -32,9 +32,8 @@ from pyspark.sql import DataFrame
 
 from pyspark.sql import functions as F
 
-from ..core.warc import (
-    build_wet, iter_warc_records, warc_cdx, warc_redirects, warc_responses,
-    warc_revisits)
+from ..core import warc as cw
+from ..operators.udfs import map_rows
 
 WARC_RESPONSES_SCHEMA = (
     'file_name string, rec_ord int, url string, warc_date string, '
@@ -48,18 +47,11 @@ def read_warc_responses(files: DataFrame, file_col: str = 'file_name',
     file order, as one row (see core/warc.py for the record spec —
     de-chunking, charset resolution, truncation/resync policy)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                for rec in warc_responses(bytes(data)):
-                    rows.append((fname, *rec))
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'rec_ord', 'url', 'warc_date',
-                               'http_status', 'mime', 'charset', 'n_bytes', 'text']
-            )
+    def warc_responses(fname, data):
+        for rec in cw.warc_responses(bytes(data)):
+            yield (fname, *rec)
 
-    return files.select(file_col, data_col).mapInPandas(run, schema=WARC_RESPONSES_SCHEMA)
+    return map_rows(files, [file_col, data_col], warc_responses, WARC_RESPONSES_SCHEMA)
 
 
 def iter_html_pages(data: bytes) -> Iterator[tuple]:
@@ -67,7 +59,7 @@ def iter_html_pages(data: bytes) -> Iterator[tuple]:
     blob that passes the fetch-policy gate (HTTP 200 + ``text/html``),
     html as the page's UTF-8 bytes — the one gate every text
     derivative (main content, WET) applies."""
-    for (_ord, url, wdate, status, mime, _cs, _nb, text) in warc_responses(data):
+    for (_ord, url, wdate, status, mime, _cs, _nb, text) in cw.warc_responses(data):
         if status == 200 and mime == 'text/html':
             yield url, wdate, text.encode('utf-8')
 
@@ -86,19 +78,11 @@ def read_warc_revisits(files: DataFrame, file_col: str = 'file_name',
     headers + WARC-Refers-To pointers; see core/warc.py's revisit
     spec).  One mapInPandas pass, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                for rec in warc_revisits(bytes(data)):
-                    rows.append((fname, *rec))
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'rec_ord', 'url', 'warc_date',
-                               'profile', 'refers_to_uri', 'refers_to_date',
-                               'http_status']
-            )
+    def warc_revisits(fname, data):
+        for rec in cw.warc_revisits(bytes(data)):
+            yield (fname, *rec)
 
-    return files.select(file_col, data_col).mapInPandas(run, schema=WARC_REVISITS_SCHEMA)
+    return map_rows(files, [file_col, data_col], warc_revisits, WARC_REVISITS_SCHEMA)
 
 
 def resolve_revisits(revisits: DataFrame, responses: DataFrame) -> DataFrame:
@@ -189,8 +173,6 @@ def write_dedup_warc(deduped: DataFrame, out_files: int | None = None) -> DataFr
     spark = deduped.sparkSession
     n = out_files or spark.sparkContext.defaultParallelism
 
-    from ..core.warc import build_warc
-
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
         parts = [pdf for pdf in batches if not pdf.empty]
@@ -208,7 +190,7 @@ def write_dedup_warc(deduped: DataFrame, out_files: int | None = None) -> DataFr
         name = 'dedup-' + hashlib.sha256(
             (first[0] + first[1]).encode('utf-8')).hexdigest()[:16] + '.warc.gz'
         yield pd.DataFrame(
-            [(name, build_warc(entries), len(entries))],
+            [(name, cw.build_warc(entries), len(entries))],
             columns=['file_name', 'data', 'n_records'])
 
     ordered = (
@@ -239,19 +221,11 @@ def read_warc_redirects(files: DataFrame, file_col: str = 'file_name',
     Location header, '' for a dead redirect).  One mapInPandas pass,
     no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                for rec in warc_redirects(bytes(data)):
-                    rows.append((fname, *rec))
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'rec_ord', 'url', 'warc_date',
-                               'http_status', 'location']
-            )
+    def warc_redirects(fname, data):
+        for rec in cw.warc_redirects(bytes(data)):
+            yield (fname, *rec)
 
-    return files.select(file_col, data_col).mapInPandas(
-        run, schema=WARC_REDIRECTS_SCHEMA)
+    return map_rows(files, [file_col, data_col], warc_redirects, WARC_REDIRECTS_SCHEMA)
 
 
 def read_warc_cdx(files: DataFrame, file_col: str = 'file_name',
@@ -273,19 +247,11 @@ def read_warc_cdx(files: DataFrame, file_col: str = 'file_name',
     crawl scale."""
     from ..core.wwwtools import surt_key
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                for rec in warc_cdx(bytes(data)):
-                    rows.append((fname, *rec[:3], surt_key(rec[2]), *rec[3:]))
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'ord', 'warc_type', 'url',
-                               'surt', 'offset', 'length', 'addressable',
-                               'warc_date']
-            )
+    def warc_cdx(fname, data):
+        for rec in cw.warc_cdx(bytes(data)):
+            yield (fname, *rec[:3], surt_key(rec[2]), *rec[3:])
 
-    return files.select(file_col, data_col).mapInPandas(run, schema=WARC_CDX_SCHEMA)
+    return map_rows(files, [file_col, data_col], warc_cdx, WARC_CDX_SCHEMA)
 
 
 WET_SCHEMA = 'file_name string, wet binary, n_records int'
@@ -302,17 +268,13 @@ def warc_to_wet(files: DataFrame, file_col: str = 'file_name',
     ``iter_html_pages``, shared with ``warc_main_content``)."""
     from ..core import maincontent as mc
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                entries = [(url, wdate, mc.main_text(mc.extract_blocks(html)))
-                           for url, wdate, html in iter_html_pages(bytes(data))]
-                wet_name = fname.rsplit('.warc', 1)[0] + '.warc.wet.gz'
-                rows.append((wet_name, build_wet(entries), len(entries)))
-            yield pd.DataFrame(rows, columns=['file_name', 'wet', 'n_records'])
+    def warc_to_wet(fname, data):
+        entries = [(url, wdate, mc.main_text(mc.extract_blocks(html)))
+                   for url, wdate, html in iter_html_pages(bytes(data))]
+        wet_name = fname.rsplit('.warc', 1)[0] + '.warc.wet.gz'
+        yield wet_name, cw.build_wet(entries), len(entries)
 
-    return files.select(file_col, data_col).mapInPandas(run, schema=WET_SCHEMA)
+    return map_rows(files, [file_col, data_col], warc_to_wet, WET_SCHEMA)
 
 
 def read_wet_records(wet_files: DataFrame, file_col: str = 'file_name',
@@ -322,26 +284,20 @@ def read_wet_records(wet_files: DataFrame, file_col: str = 'file_name',
     writer's output is reader-parseable by construction; the round-trip
     is pinned by the wet_roundtrip driver query and tests)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                k = 0
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get('warc-type') != 'conversion':
-                        continue
-                    url = headers.get('warc-target-uri', '')
-                    if url.startswith('<') and url.endswith('>'):
-                        url = url[1:-1]
-                    rows.append((fname, k, url, headers.get('warc-date', ''),
-                                 payload.decode('utf-8', errors='replace')))
-                    k += 1
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'rec_ord', 'url', 'warc_date', 'text'])
+    def wet_records(fname, data):
+        k = 0
+        for headers, payload in cw.iter_warc_records(bytes(data)):
+            if headers.get('warc-type') != 'conversion':
+                continue
+            url = headers.get('warc-target-uri', '')
+            if url.startswith('<') and url.endswith('>'):
+                url = url[1:-1]
+            yield (fname, k, url, headers.get('warc-date', ''),
+                   payload.decode('utf-8', errors='replace'))
+            k += 1
 
-    return wet_files.select(file_col, data_col).mapInPandas(
-        run, schema='file_name string, rec_ord int, url string, '
-                    'warc_date string, text string')
+    return map_rows(wet_files, [file_col, data_col], wet_records,
+                    'file_name string, rec_ord int, url string, warc_date string, text string')
 
 
 def wat_payload_json(url: str, wdate: str, status: int, mime: str,
@@ -384,23 +340,15 @@ def warc_to_wat(files: DataFrame, file_col: str = 'file_name',
     ``application/json`` payloads) in ONE mapInPandas pass — no
     shuffle; the WAT file mirrors its WARC file response-for-response
     (all statuses; the html block only on 200/text-html)."""
-    from ..core.warc import build_wat_records
+    def warc_to_wat(fname, data):
+        entries = [(url, wdate, wat_payload_json(url, wdate, status, mime, text))
+                   for (_ord, url, wdate, status, mime, _cs, _nb, text)
+                   in cw.warc_responses(bytes(data))]
+        wat_name = fname.rsplit('.warc', 1)[0] + '.warc.wat.gz'
+        yield wat_name, cw.build_wat_records(entries), len(entries)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                entries = []
-                for (_ord, url, wdate, status, mime, _cs, _nb, text) in (
-                        warc_responses(bytes(data))):
-                    entries.append(
-                        (url, wdate, wat_payload_json(url, wdate, status, mime, text)))
-                wat_name = fname.rsplit('.warc', 1)[0] + '.warc.wat.gz'
-                rows.append((wat_name, build_wat_records(entries), len(entries)))
-            yield pd.DataFrame(rows, columns=['file_name', 'wat', 'n_records'])
-
-    return files.select(file_col, data_col).mapInPandas(
-        run, schema='file_name string, wat binary, n_records int')
+    return map_rows(files, [file_col, data_col], warc_to_wat,
+                    'file_name string, wat binary, n_records int')
 
 
 def read_wat_records(wat_files: DataFrame, file_col: str = 'file_name',
@@ -411,29 +359,22 @@ def read_wat_records(wat_files: DataFrame, file_col: str = 'file_name',
     import hashlib
     import json
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, data in zip(pdf[file_col], pdf[data_col]):
-                k = 0
-                for headers, payload in iter_warc_records(bytes(data)):
-                    if headers.get('warc-type') != 'metadata':
-                        continue
-                    url = headers.get('warc-target-uri', '')
-                    if url.startswith('<') and url.endswith('>'):
-                        url = url[1:-1]
-                    doc = json.loads(payload.decode('utf-8'))
-                    html = doc['envelope']['payload'].get('html') or {}
-                    rows.append((fname, k, url, html.get('title', ''),
-                                 len(html.get('links', [])),
-                                 hashlib.sha256(payload).hexdigest()))
-                    k += 1
-            yield pd.DataFrame(
-                rows, columns=['file_name', 'rec_ord', 'url', 'title',
-                               'n_links', 'payload_sha'])
+    def wat_records(fname, data):
+        k = 0
+        for headers, payload in cw.iter_warc_records(bytes(data)):
+            if headers.get('warc-type') != 'metadata':
+                continue
+            url = headers.get('warc-target-uri', '')
+            if url.startswith('<') and url.endswith('>'):
+                url = url[1:-1]
+            doc = json.loads(payload.decode('utf-8'))
+            html = doc['envelope']['payload'].get('html') or {}
+            yield (fname, k, url, html.get('title', ''), len(html.get('links', [])),
+                   hashlib.sha256(payload).hexdigest())
+            k += 1
 
-    return wat_files.select(file_col, data_col).mapInPandas(
-        run, schema='file_name string, rec_ord int, url string, title string, '
+    return map_rows(wat_files, [file_col, data_col], wat_records,
+                    'file_name string, rec_ord int, url string, title string, '
                     'n_links int, payload_sha string')
 
 
@@ -449,14 +390,10 @@ def warc_main_content(files: DataFrame, file_col: str = 'file_name',
     JVM.  Zero Exchanges; parallelism = input files, as for
     ``read_warc_responses``.  ``file_col`` is accepted for signature
     parity with the other readers; the output does not carry it."""
-    from ..operators.maincontent import (
-        MAIN_CONTENT_COLUMNS, MAIN_CONTENT_SCHEMA, main_content_row)
+    from ..operators.maincontent import MAIN_CONTENT_SCHEMA, main_content_row
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [main_content_row(url, html)
-                    for data in pdf[data_col]
-                    for url, _wdate, html in iter_html_pages(bytes(data))]
-            yield pd.DataFrame(rows, columns=MAIN_CONTENT_COLUMNS)
+    def warc_main_content(data):
+        for url, _wdate, html in iter_html_pages(bytes(data)):
+            yield main_content_row(url, html)
 
-    return files.select(data_col).mapInPandas(run, schema=MAIN_CONTENT_SCHEMA)
+    return map_rows(files, [data_col], warc_main_content, MAIN_CONTENT_SCHEMA)

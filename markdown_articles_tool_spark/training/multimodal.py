@@ -10,10 +10,14 @@ Swapping a real decoder in changes one inner function, not the plan.
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+import hashlib
+import math
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+from pyspark.sql import DataFrame
+
+from ..operators.udfs import map_rows
 
 MEDIA_META_SCHEMA = (
     'path string, size_bytes long, magic string, media_type string, '
@@ -39,20 +43,11 @@ def _sniff(content: bytes):
 def extract_media_metadata(images: DataFrame, path_col: str = 'real_path', content_col: str = 'content') -> DataFrame:
     """Typed metadata over an opaque binary column via mapInPandas."""
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def media_metadata(path, content):
+        b = bytes(content) if content is not None else b''
+        yield (path, len(b), *_sniff(b), hashlib.sha256(b).hexdigest()[:16])
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b''
-                magic, mtype = _sniff(b)
-                rows.append((path, len(b), magic, mtype, hashlib.sha256(b).hexdigest()[:16]))
-            yield pd.DataFrame(
-                rows, columns=['path', 'size_bytes', 'magic', 'media_type', 'fake_checksum']
-            )
-
-    return images.select(path_col, content_col).mapInPandas(meta, schema=MEDIA_META_SCHEMA)
+    return map_rows(images, [path_col, content_col], media_metadata, MEDIA_META_SCHEMA)
 
 
 FRAMES_SCHEMA = (
@@ -78,27 +73,16 @@ def sample_frames(
     the same schema — the Spark-side plumbing (one mapInPandas pass,
     per-frame rows out, bytes never shuffled) is the contract."""
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def media_frames(path, content):
+        b = bytes(content) if content is not None else b''
+        if not b:
+            return
+        for k in range(n_frames):
+            off = k * len(b) // n_frames
+            frame = b[off:off + frame_bytes]
+            yield path, k, off, len(frame), hashlib.sha256(frame).hexdigest()[:16]
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b''
-                if not b:
-                    continue
-                for k in range(n_frames):
-                    off = k * len(b) // n_frames
-                    frame = b[off:off + frame_bytes]
-                    rows.append(
-                        (path, k, off, len(frame), hashlib.sha256(frame).hexdigest()[:16])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=['path', 'frame_idx', 'frame_offset', 'frame_len', 'frame_sha16'],
-            )
-
-    return images.select(path_col, content_col).mapInPandas(frames, schema=FRAMES_SCHEMA)
+    return map_rows(images, [path_col, content_col], media_frames, FRAMES_SCHEMA)
 
 
 FEATURES_SCHEMA = 'path string, bucket int, ratio double, entropy double'
@@ -119,34 +103,45 @@ def extract_features(images: DataFrame, path_col: str = 'real_path', content_col
     entropy 0.  One Arrow pass, 16 narrow rows per blob, bytes never
     shuffled."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def media_features(path, content):
+        b = bytes(content) if content is not None else b''
+        if b:
+            counts = np.bincount(np.frombuffer(b, dtype=np.uint8) >> 4, minlength=16)
+            ratios = [round(int(c) / len(b), 6) for c in counts]
+        else:
+            ratios = [0.0] * 16
+        ent = 0.0
+        for p in ratios:
+            if p > 0:
+                ent -= p * math.log2(p)
+        ent = round(ent, 6)
+        for k in range(16):
+            yield path, k, ratios[k], ent
 
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b''
-                if b:
-                    counts = np.bincount(
-                        np.frombuffer(b, dtype=np.uint8) >> 4, minlength=16
-                    )
-                    ratios = [round(int(c) / len(b), 6) for c in counts]
-                else:
-                    ratios = [0.0] * 16
-                ent = 0.0
-                for p in ratios:
-                    if p > 0:
-                        ent -= p * math.log2(p)
-                ent = round(ent, 6)
-                rows.extend((path, k, ratios[k], ent) for k in range(16))
-            yield pd.DataFrame(rows, columns=['path', 'bucket', 'ratio', 'entropy'])
-
-    return images.select(path_col, content_col).mapInPandas(feats, schema=FEATURES_SCHEMA)
+    return map_rows(images, [path_col, content_col], media_features, FEATURES_SCHEMA)
 
 
 DECODED_SCHEMA = 'path string, width int, height int, n_channels int, decoder string'
+
+
+@functools.cache
+def _decode_kernel():
+    """bytes → (width, height, n_channels, decoder): a real PIL decode
+    when PIL imports, else a deterministic stub.  Probed once per
+    worker process."""
+    try:
+        from PIL import Image  # noqa: F401
+        from io import BytesIO
+
+        def kernel(b: bytes):
+            img = Image.open(BytesIO(b))
+            return img.width, img.height, len(img.getbands()), 'pil'
+    except ImportError:
+
+        def kernel(b: bytes):
+            # STUB: deterministic fake dims — PIL absent in this env
+            return 16 + len(b) % 64, 16 + (len(b) // 64) % 64, 3, 'stub'
+    return kernel
 
 
 def decode_images(images: DataFrame, path_col: str = 'real_path', content_col: str = 'content') -> DataFrame:
@@ -154,29 +149,12 @@ def decode_images(images: DataFrame, path_col: str = 'real_path', content_col: s
     marked deterministic stub (dims derived from the byte length) so
     the plan stays exercisable end-to-end."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def media_decode(path, content):
+        b = bytes(content) if content is not None else b''
         try:
-            from PIL import Image  # noqa: F401
-            from io import BytesIO
+            dims = _decode_kernel()(b)
+        except Exception:
+            dims = None, None, None, 'error'
+        yield (path, *dims)
 
-            def kernel(b: bytes):
-                img = Image.open(BytesIO(b))
-                return img.width, img.height, len(img.getbands()), 'pil'
-        except ImportError:
-
-            def kernel(b: bytes):
-                # STUB: deterministic fake dims — PIL absent in this env
-                return 16 + len(b) % 64, 16 + (len(b) // 64) % 64, 3, 'stub'
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b''
-                try:
-                    w, h, c, d = kernel(b)
-                except Exception:
-                    w, h, c, d = None, None, None, 'error'
-                rows.append((path, w, h, c, d))
-            yield pd.DataFrame(rows, columns=['path', 'width', 'height', 'n_channels', 'decoder'])
-
-    return images.select(path_col, content_col).mapInPandas(decode, schema=DECODED_SCHEMA)
+    return map_rows(images, [path_col, content_col], media_decode, DECODED_SCHEMA)

@@ -109,17 +109,6 @@ def _hyperplanes(n_planes: int, dim: int):
     return rng.standard_normal((n_planes, dim)).astype('float64')
 
 
-def band_keys(vec, n_planes: int, band_bits: int):
-    """Sequential twin of the signature UDF below: ``band_bits``-bit
-    band keys for ONE embedding (numpy row path shared with the UDF via
-    ``_pack_band_keys``).  Used by tests and the DuckDB-oracle
-    precompute (tools/gen_oracleref.py)."""
-    import numpy as np
-
-    mat = np.asarray([vec], dtype='float64')
-    return [int(x) for x in _pack_band_keys(mat, n_planes, band_bits)[0]]
-
-
 def _pack_band_keys(mat, n_planes: int, band_bits: int):
     import numpy as np
 
