@@ -30,15 +30,13 @@ no streaming concept).  Each transformer pass runs in two phases:
   full if its marker is missing; it is deterministic and overwrite-
   idempotent.
 
-Images: a one-pass config's phase B writes its images straight to
-``images`` (a pass's ``images_out`` is already unique per
-``real_path``) and keeps both markers, ``pass=0_final`` and
-``images_final``; the pass counts as done only when both are
-committed, so a crash anywhere before the second re-runs phase B.
-Multi-pass configs stage each pass's images under
-``stage/pass=P/images`` and fold them into ``images`` at the end (first
-pass wins).  Dedup registrations are staged only for a next pass to
-read, so never for the last one.
+The pass loop is ``pipeline.run_passes``, shared with the lazy driver.
+A non-last pass stages its docs (``docs_pass/pass=P``), images
+(``stage/pass=P/images``) and, for content-hash dedup, registrations,
+then commits ``pass=P_final``.  The last pass writes ``images`` in
+every config (first write per path over the staged images and its
+own) and commits both ``pass=P_final`` and ``images_final``; it is done
+only when both are, so a crash before the second re-runs its phase B.
 
 Lineage parquet-style rows: per (pass, shard) JSON with n_docs +
 per-status link counts + wall seconds (the per-partition metrics
@@ -54,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import List, Optional
 
@@ -62,7 +61,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from .core import docfold
 from .core.linkflow import DedupVariant, TransformConfig
 from .io_sinks import ParquetMarkerSink, TableSink
-from .pipeline import LINKMETA_COLS, extract_pass_links, finish_pass, first_pass_wins
+from .pipeline import LINKMETA_COLS, extract_pass_links, run_passes
 
 LINK_STATUSES = (docfold.OK, docfold.SKIPPED, docfold.MIME_DROP, docfold.NO_FILENAME, docfold.ERROR)
 
@@ -103,29 +102,18 @@ def run_with_resume(
     runtime in this sandbox).
     """
     sink = sink or ParquetMarkerSink(out_dir)
-    ran, skipped = set(), set()
-    finals_ran = False
-    # one pass: phase B's images are final (nothing to fold across
-    # passes), so it writes them to ``images`` itself
-    direct_images = len(cfg.input_formats) == 1
+    last = len(cfg.input_formats) - 1
+    ran = set()
+    phase_b_t0 = 0.0
 
-    for i, fmt in enumerate(cfg.input_formats):
-        last = i == len(cfg.input_formats) - 1
-        finals = [f'pass={i}_final'] + (['images_final'] if direct_images else [])
-        if all(sink.is_committed(m) for m in finals):
-            skipped.update(range(n_shards))
-            continue
+    def finals(i: int) -> List[str]:
+        return [f'pass={i}_final'] + (['images_final'] if i == last else [])
 
-        cur_docs = (
-            docs.select('url', 'text')
-            if i == 0
-            else sink.read(spark, f'docs_pass/pass={i - 1}')
-        )
+    # ---------------------------------------------- phase A (sharded)
+    def links_of(i: int, fmt: str, cur_docs: DataFrame):
+        nonlocal phase_b_t0
         sharded = cur_docs.withColumn('shard', F.pmod(F.xxhash64('url'), F.lit(n_shards)))
-
-        # ---------------------------------------------- phase A (sharded)
         todo = [k for k in range(n_shards) if not sink.is_committed(f'pass={i}_shard={k}')]
-        skipped.update(k for k in range(n_shards) if k not in todo)
 
         # per-shard doc counts for lineage in ONE column-pruned job
         # (r2 re-ran a full input scan per shard just for this number)
@@ -173,21 +161,17 @@ def run_with_resume(
         # would leave scheduling bubbles between every pair of shards).
         # Markers stay per-shard: a crash mid-pool commits exactly the
         # shards that finished, resume picks up the rest.
-        workers = int(os.environ.get('SPARK_GRAFT_SHARD_WORKERS', '4'))
-        if len(todo) <= 1 or workers <= 1:
+        workers = min(int(os.environ.get('SPARK_GRAFT_SHARD_WORKERS', '4')), len(todo))
+        if workers <= 1:
             for k in todo:
                 _run_shard(k)
         else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(workers, len(todo))) as pool:
-                for _ in pool.map(_run_shard, todo):
-                    pass
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                list(pool.map(_run_shard, todo))
         ran.update(todo)
 
-        # ---------------------------------------------- phase B (global)
-        t0 = time.time()
-        finals_ran = True
+        # ------------------------------------------ phase B (global)
+        phase_b_t0 = time.time()
         # the shard=K dirs read back as a discovered partition column —
         # project it away so finish_pass sees exactly the linkmeta shape
         links_all = sink.read(spark, f'stage/pass={i}/links').select(*LINKMETA_COLS)
@@ -206,37 +190,39 @@ def run_with_resume(
             .agg(F.min_by(F.struct('sha_hex', 'content'), 'shard').alias('w'))
             .select('fetch_key', 'w.sha_hex', 'w.content')
         )
-        dedup_state = None
-        if i > 0 and cfg.deduplication == DedupVariant.CONTENT_HASH:
-            dedup_state = sink.read(spark, f'stage/pass={i - 1}/registrations')
-        res = finish_pass(cur_docs, links_all, fetched_all, cfg, pass_idx=i, dedup_state=dedup_state)
+        return links_all, fetched_all, ()
 
+    def commit(i: int, out: tuple, names: tuple) -> None:
+        """Write pass ``i``'s ``(docs, registrations, images)`` under
+        ``names`` and its lineage row (the docs write counts the docs),
+        then commit its finals."""
         obs = Observation()
-        docs_out = res.docs_out.observe(obs, F.count(F.lit(1)).alias('n_docs_out'))
-        if last:
-            sink.write(docs_out, 'docs')
-        else:
-            sink.write(docs_out.withColumnRenamed('text_out', 'text'), f'docs_pass/pass={i}')
-        if direct_images:
-            sink.write(res.images_out, 'images')
-        else:
-            sink.write(res.images_out.withColumn('_pass', F.lit(i)), f'stage/pass={i}/images')
-        if res.dedup_registrations is not None and not last:
-            sink.write(res.dedup_registrations, f'stage/pass={i}/registrations')
+        docs_out, registrations, images = out
+        sink.write(docs_out.observe(obs, F.count(F.lit(1)).alias('n_docs_out')), names[0])
+        sink.write(images, names[2])
+        if registrations is not None:
+            sink.write(registrations, names[1])
         _write_lineage(out_dir, f'pass-{i}.json', {
             'pass': i,
             'n_docs_out': obs.get['n_docs_out'],
-            'wall_sec': round(time.time() - t0, 3),
+            'wall_sec': round(time.time() - phase_b_t0, 3),
         })
-        for m in finals:
+        for m in finals(i):
             sink.mark_committed(m)
 
-    # ------------------------------------- final images (cross-pass wins)
-    if not direct_images and (finals_ran or not sink.is_committed('images_final')):
-        sink.write(first_pass_wins(sink.read(spark, 'stage/pass=*/images')), 'images')
-        sink.mark_committed('images_final')
+    def stage(i: int, out) -> tuple:
+        content_hash = cfg.deduplication == DedupVariant.CONTENT_HASH
+        names = (f'docs_pass/pass={i}', f'stage/pass={i}/registrations' if content_hash else None,
+                 f'stage/pass={i}/images')
+        if out is not None:
+            commit(i, out, names)
+        return tuple(name and sink.read(spark, name) for name in names)
 
-    return RunReport(n_shards, sorted(ran), sorted(skipped - ran))
+    res = run_passes(docs, cfg, links_of, stage,
+                     done=lambda i: all(sink.is_committed(m) for m in finals(i)))
+    if res is not None:
+        commit(last, (res.docs_out, None, res.images_out), ('docs', None, 'images'))
+    return RunReport(n_shards, sorted(ran), [k for k in range(n_shards) if k not in ran])
 
 
 def read_output(spark: SparkSession, out_dir: str, sink: Optional[TableSink] = None) -> DataFrame:
@@ -260,18 +246,8 @@ def lineage_df(spark: SparkSession, out_dir: str) -> DataFrame:
     metric, not a fact about the data).  ``explode_outer`` + '(none)'
     keeps shards that staged zero links visible with their n_docs —
     at corpus scale an empty shard is a skew signal, not a non-event."""
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, MapType, StringType, StructField, StructType,
-    )
-
-    schema = StructType([
-        StructField('pass', IntegerType()),
-        StructField('shard', IntegerType()),
-        StructField('n_docs', LongType()),
-        StructField('n_links', LongType()),
-        StructField('status_counts', MapType(StringType(), LongType())),
-        StructField('wall_sec', DoubleType()),
-    ])
+    schema = ('pass int, shard int, n_docs bigint, n_links bigint, '
+              'status_counts map<string, bigint>, wall_sec double')
     raw = spark.read.schema(schema).json(os.path.join(out_dir, 'lineage', 'shard-*.json'))
     return (
         raw.select(

@@ -27,8 +27,9 @@ content hash (near-uniform keys) — no driver-side collection anywhere.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from pathlib import PurePosixPath
-from typing import List, Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -477,41 +478,57 @@ def _with_real_path(links: DataFrame, cfg: TransformConfig, fn) -> DataFrame:
     )
 
 
+def run_passes(
+    docs: DataFrame,
+    cfg: TransformConfig,
+    links_of: Callable[[int, str, DataFrame], tuple],
+    stage: Callable[[int, Optional[tuple]], tuple],
+    done: Callable[[int], bool] = lambda i: False,
+) -> Optional[PipelineResult]:
+    """The transformer chain (E5, article_processor.py:129-149) with dedup
+    state shared across passes: the pass loop of both drivers.
+
+    ``links_of(i, fmt, docs)`` runs pass ``i``'s shard-local half, as
+    ``extract_pass_links`` does.  ``stage(i, out)`` returns a non-last
+    pass's ``out = (docs, registrations, images)`` as the next pass reads
+    it; ``out`` is None for a pass ``done(i)`` reports complete.  The last
+    pass's images are final: its own in a one-pass config, otherwise the
+    first write per path.  None if the last pass is done."""
+    finished = [done(i) for i in range(len(cfg.input_formats))]
+    if finished[-1]:
+        return None
+    cur, dedup_state = docs.select('url', 'text'), None
+    audits, images, cached = [], [], []
+    for i, fmt in enumerate(cfg.input_formats):
+        out = None
+        if not finished[i]:
+            links, fetched, pass_cached = links_of(i, fmt, cur)
+            cached.extend(pass_cached)
+            res = finish_pass(cur, links, fetched, cfg, pass_idx=i, dedup_state=dedup_state)
+            audits.append(res.links_audit)
+            out = (res.docs_out.withColumnRenamed('text_out', 'text'), res.dedup_registrations,
+                   res.images_out.withColumn('_pass', F.lit(i)))
+        if i == len(finished) - 1:
+            break
+        cur, dedup_state, staged = stage(i, out)
+        images.append(staged)
+    images_out = res.images_out
+    if images:
+        images_out = first_pass_wins(reduce(DataFrame.unionByName, images + [out[2]]))
+    return PipelineResult(res.docs_out, reduce(DataFrame.unionByName, audits), images_out, tuple(cached))
+
+
 def transform_documents(
     docs: DataFrame,
     cfg: TransformConfig,
     fetcher: Optional[Fetcher] = None,
     local_assets: Optional[dict] = None,
 ) -> PipelineResult:
-    """Full transform: sequential transformer chain (E5,
-    article_processor.py:129-149), shared dedup state across passes."""
-    cur = docs.select('url', 'text')
-    audits: List[DataFrame] = []
-    images: List[DataFrame] = []
-    cached: List[DataFrame] = []
-    dedup_state = None
-    for i, fmt in enumerate(cfg.input_formats):
-        links, fetched, pass_cached = extract_pass_links(
-            cur, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
-        )
-        res = finish_pass(cur, links, fetched, cfg, pass_idx=i, dedup_state=dedup_state)
-        audits.append(res.links_audit)
-        images.append(res.images_out.withColumn('_pass', F.lit(i)))
-        cached.extend(pass_cached)
-        if res.dedup_registrations is not None:
-            dedup_state = res.dedup_registrations
-        cur = res.docs_out.withColumnRenamed('text_out', 'text')
-        if i < len(cfg.input_formats) - 1:
-            # materialization barrier between passes: pass N+1 extracts
-            # from pass N's rewritten text (article_processor.py:147)
-            cur = cur.localCheckpoint(eager=False)
-
-    audit = audits[0]
-    for a in audits[1:]:
-        audit = audit.unionByName(a)
-    imgs = images[0]
-    for im in images[1:]:
-        imgs = imgs.unionByName(im)
-
-    return PipelineResult(cur.withColumnRenamed('text', 'text_out'), audit, first_pass_wins(imgs),
-                          cached=tuple(cached))
+    """Full transform, lazy and unsharded (``run_passes`` in memory)."""
+    return run_passes(
+        docs, cfg,
+        lambda i, fmt, cur: extract_pass_links(cur, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets),
+        # materialization barrier between passes: pass N+1 extracts
+        # from pass N's rewritten text (article_processor.py:147)
+        lambda i, out: (out[0].localCheckpoint(eager=False), *out[1:]),
+    )

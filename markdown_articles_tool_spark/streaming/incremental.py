@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from .. import corpus
 from ..core.linkflow import TransformConfig
 from ..pipeline import transform_documents
+from . import append_parquet
 
 
 def start_incremental_transform(
@@ -30,7 +31,6 @@ def start_incremental_transform(
     input_dir: str,
     output_dir: str,
     cfg: Optional[TransformConfig] = None,
-    trigger_available_now: bool = True,
 ):
     """Start the stream; returns the StreamingQuery."""
     cfg = cfg or TransformConfig(skip_all_errors=True)
@@ -46,19 +46,18 @@ def start_incremental_transform(
         res.images_out.write.mode('append').parquet(os.path.join(output_dir, 'images'))
         res.cleanup()
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        'checkpointLocation', os.path.join(output_dir, '_checkpoint')
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option('checkpointLocation', os.path.join(output_dir, '_checkpoint'))
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_main_content(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming main-content extraction: pages land as parquet files →
     boilerplate-stripped (url, main_text, n_blocks, n_kept) rows append
@@ -77,23 +76,13 @@ def start_incremental_main_content(
         .parquet(input_dir)
         .select('url', 'html')
     )
-    writer = (
-        extract_main_content(stream)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'main_content'))
-        .option('checkpointLocation', os.path.join(output_dir, '_mc_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(extract_main_content(stream), output_dir, 'main_content', '_mc_checkpoint')
 
 
 def start_incremental_pdf_text(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming PDF/layout extraction over a landing (url, pdf binary)
     directory: same native stateless-mapInPandas shape as the
@@ -103,23 +92,13 @@ def start_incremental_pdf_text(
     from ..operators.pdfextract import extract_pdf_text
 
     stream = spark.readStream.schema(corpus.PDFS_SCHEMA).parquet(input_dir)
-    writer = (
-        extract_pdf_text(stream)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'pdf_text'))
-        .option('checkpointLocation', os.path.join(output_dir, '_pdf_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(extract_pdf_text(stream), output_dir, 'pdf_text', '_pdf_checkpoint')
 
 
 def start_incremental_content_spans(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming per-block span rows (own checkpoint; same native
     stateless shape as the main-content stream)."""
@@ -130,23 +109,14 @@ def start_incremental_content_spans(
         .parquet(input_dir)
         .select('url', 'html')
     )
-    writer = (
-        extract_content_spans(stream)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'content_spans'))
-        .option('checkpointLocation', os.path.join(output_dir, '_spans_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(extract_content_spans(stream), output_dir, 'content_spans',
+                          '_spans_checkpoint')
 
 
 def start_incremental_quality(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming Gopher quality filtering over the landing pages
     directory: each newly-landed file's documents get the six-rule
@@ -162,23 +132,14 @@ def start_incremental_quality(
         .parquet(input_dir)
         .select('url', 'text')
     )
-    writer = (
-        gopher_filter(stream, id_col='url', text_col='text')
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'quality'))
-        .option('checkpointLocation', os.path.join(output_dir, '_quality_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(gopher_filter(stream, id_col='url', text_col='text'),
+                          output_dir, 'quality', '_quality_checkpoint')
 
 
 def start_incremental_warc(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming crawl-archive ingestion: WARC blobs land as
     (file_name, data) parquet files → flattened HTTP response records
@@ -198,22 +159,13 @@ def start_incremental_warc(
     out = read_warc_responses(stream).withColumn(
         'text_sha', F.sha2(F.encode('text', 'utf-8'), 256)
     )
-    writer = (
-        out.writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'warc_responses'))
-        .option('checkpointLocation', os.path.join(output_dir, '_warc_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(out, output_dir, 'warc_responses', '_warc_checkpoint')
 
 
 def start_incremental_scrub(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming corpus hygiene over the landing pages directory: each
     newly-landed file's documents get mojibake repair → PII scrub →
@@ -230,16 +182,8 @@ def start_incremental_scrub(
         .parquet(input_dir)
         .select('url', 'text')
     )
-    writer = (
-        scrub(stream, id_col='url', keep_text=True)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'scrubbed'))
-        .option('checkpointLocation', os.path.join(output_dir, '_scrub_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(scrub(stream, id_col='url', keep_text=True),
+                          output_dir, 'scrubbed', '_scrub_checkpoint')
 
 
 def start_incremental_bloom(
@@ -247,7 +191,6 @@ def start_incremental_bloom(
     input_dir: str,
     output_dir: str,
     bloom_path: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming incremental dedup against a PUBLISHED Bloom filter
     (training/bloomdedup.save_bloom over the historical corpus): each
@@ -268,12 +211,4 @@ def start_incremental_bloom(
     )
     out = bloom_probe(stream, words, 'digest', m_bits, k_hashes).select(
         'url', 'digest', 'novel')
-    writer = (
-        out.writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'bloom_novel'))
-        .option('checkpointLocation', os.path.join(output_dir, '_bloom_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(out, output_dir, 'bloom_novel', '_bloom_checkpoint')

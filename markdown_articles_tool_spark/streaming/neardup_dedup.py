@@ -75,6 +75,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import corpus
 from ..training.dedup import jaccard_pairs, make_minhash_udf
+from . import append_parquet
 
 K = 64
 BANDS = 16
@@ -258,29 +259,13 @@ def start_neardup_dedup(
     if max_files_per_trigger:
         reader = reader.option('maxFilesPerTrigger', max_files_per_trigger)
     pages = reader.parquet(input_dir).select('url', 'text')
-    qa = (
-        register_bands(pages, k, bands)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'bands'))
-        .option('checkpointLocation', os.path.join(output_dir, '_bands_checkpoint'))
-        .outputMode('append')
-        .trigger(availableNow=True)
-        .start()
-    )
-    qa.awaitTermination()
+    append_parquet(register_bands(pages, k, bands), output_dir, 'bands',
+                   '_bands_checkpoint').awaitTermination()
     bands_stream = spark.readStream.schema(BAND_OUTPUT).parquet(
         os.path.join(output_dir, 'bands')
     )
-    qb = (
-        fold_verdicts(bands_stream, bands)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'verdicts'))
-        .option('checkpointLocation', os.path.join(output_dir, '_verdicts_checkpoint'))
-        .outputMode('append')
-        .trigger(availableNow=True)
-        .start()
-    )
-    qb.awaitTermination()
+    append_parquet(fold_verdicts(bands_stream, bands), output_dir, 'verdicts',
+                   '_verdicts_checkpoint').awaitTermination()
     if verify_threshold is not None:
         verify_verdicts(spark, output_dir, input_dir, verify_threshold, ngram_n)
 

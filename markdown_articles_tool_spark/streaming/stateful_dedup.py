@@ -18,7 +18,6 @@ expires; a TTL'd variant is one argument away).
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -26,6 +25,7 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import corpus
+from . import append_parquet
 
 OUTPUT_SCHEMA = 'content_key string, url string, text string'
 STATE_SCHEMA = 'seen boolean, first_url string'
@@ -96,7 +96,6 @@ def start_stateful_dedup(
     input_dir: str,
     output_dir: str,
     max_files_per_trigger: int | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the stream; each distinct text lands in the output table
     exactly once, no matter how many files/batches repeat it."""
@@ -104,13 +103,4 @@ def start_stateful_dedup(
     if max_files_per_trigger:
         reader = reader.option('maxFilesPerTrigger', max_files_per_trigger)
     stream = reader.parquet(input_dir).select('url', 'text')
-    writer = (
-        dedup_stream(stream)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'deduped'))
-        .option('checkpointLocation', os.path.join(output_dir, '_dedup_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(dedup_stream(stream), output_dir, 'deduped', '_dedup_checkpoint')

@@ -22,11 +22,10 @@ the html/text bytes never enter state, only their lengths do.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession, functions as F
 
 from .. import corpus
+from . import append_parquet
 
 
 def crawl_window_stats(
@@ -58,7 +57,6 @@ def start_crawl_window_stats(
     output_dir: str,
     window: str = '1 hour',
     watermark: str = '2 hours',
-    trigger_available_now: bool = True,
 ):
     """Start the windowed-stats stream; returns the StreamingQuery.
 
@@ -71,13 +69,5 @@ def start_crawl_window_stats(
         .parquet(input_dir)
         .select('warc_ts', 'lang', 'html', 'text')
     )
-    writer = (
-        crawl_window_stats(stream, window=window, watermark=watermark)
-        .writeStream.format('parquet')
-        .option('path', os.path.join(output_dir, 'crawl_stats'))
-        .option('checkpointLocation', os.path.join(output_dir, '_stats_checkpoint'))
-        .outputMode('append')
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return append_parquet(crawl_window_stats(stream, window=window, watermark=watermark),
+                          output_dir, 'crawl_stats', '_stats_checkpoint')

@@ -33,6 +33,12 @@ def _images(spark, out):
     return {r['real_path']: bytes(r['content']) for r in read_images(spark, out).collect()}
 
 
+# a chained md+html run with dedup state shared across its passes
+MULTI_PASS_CFG = TransformConfig(
+    skip_all_errors=True, input_formats=('md', 'html'), deduplication=DedupVariant.CONTENT_HASH,
+)
+
+
 def test_full_run_then_resume_noop(spark, docs, tmp_path):
     out = str(tmp_path / 'out')
     cfg = TransformConfig(skip_all_errors=True)
@@ -69,6 +75,17 @@ def test_one_pass_run_cost(spark, docs, tmp_path):
     assert delta(c0, counters(spark))['sql_executions'] <= 11
     for staged in ('images', 'registrations'):
         assert not os.path.exists(out / 'stage' / 'pass=0' / staged)
+
+
+def test_multi_pass_run_stages_no_last_pass_output(spark, docs, tmp_path):
+    """Only a non-last pass stages its images and dedup registrations
+    (the next pass reads them); the last pass writes the final images
+    itself and leaves nothing under its own stage."""
+    out = tmp_path / 'out'
+    run_with_resume(spark, docs, MULTI_PASS_CFG, str(out), n_shards=3)
+    for staged in ('images', 'registrations'):
+        assert os.path.exists(out / 'stage' / 'pass=0' / staged)
+        assert not os.path.exists(out / 'stage' / 'pass=1' / staged)
 
 
 def test_warm_run_compiles_no_class(spark, docs, tmp_path):
@@ -122,6 +139,38 @@ def test_crash_and_resume_byte_identical(spark, docs, tmp_path):
         # phase B re-ran: it rewrote both markers
         assert all(os.path.exists(os.path.join(out_b, 'commits', m))
                    for m in ('pass=0_final', 'images_final')), lost
+
+        assert _texts(spark, out_a) == _texts(spark, out_b), lost
+        assert _images(spark, out_a) == _images(spark, out_b), lost
+
+
+def test_multi_pass_crash_and_resume_byte_identical(spark, tmp_path):
+    """A 2-pass run commits pass 0 on its own and the last pass together
+    with the final images; each crash resumes to the uninterrupted
+    output and re-runs exactly the shards whose markers it lost."""
+    docs48 = spark.createDataFrame(corpus.docs_list(48), 'url string, text string')
+    out_a = str(tmp_path / 'a')
+    out_b = str(tmp_path / 'b')
+    run_with_resume(spark, docs48, MULTI_PASS_CFG, out_a, n_shards=3)
+    run_with_resume(spark, docs48, MULTI_PASS_CFG, out_b, n_shards=3)
+
+    pass1 = tuple(f'pass=1_shard={k}' for k in range(3)) + ('pass=1_final',)
+    crashes = [
+        # dying in pass 1's shard pool
+        (('pass=1_shard=1', 'pass=1_final', 'images_final'), [1]),
+        # dying in pass 0's shard pool: pass 1 re-runs every shard
+        (('pass=0_shard=2', 'pass=0_final') + pass1 + ('images_final',), [0, 1, 2]),
+        # dying between the last pass's two markers
+        (('images_final',), []),
+    ]
+    for lost, rerun in crashes:
+        for name in lost:
+            os.remove(os.path.join(out_b, 'commits', name))
+        rep = run_with_resume(spark, docs48, MULTI_PASS_CFG, out_b, n_shards=3)
+        assert rep.shards_run == rerun, lost
+        assert rep.shards_skipped == [k for k in range(3) if k not in rerun], lost
+        assert all(os.path.exists(os.path.join(out_b, 'commits', m))
+                   for m in ('pass=0_final', 'pass=1_final', 'images_final')), lost
 
         assert _texts(spark, out_a) == _texts(spark, out_b), lost
         assert _images(spark, out_a) == _images(spark, out_b), lost

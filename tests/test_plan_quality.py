@@ -77,6 +77,17 @@ class TestPlanQuality:
         assert 'BroadcastNestedLoopJoin' not in plan
 
 
+    def test_one_pass_images_not_folded(self, spark):
+        # a single pass's images are already unique per real_path: no
+        # cross-pass first-write-wins aggregate (and its shuffle of every
+        # image's bytes) may run on top of them
+        docs = spark.createDataFrame(corpus.docs_list(24), 'url string, text string')
+        images = transform_documents(docs, TransformConfig(skip_all_errors=True)).images_out
+        assert images.count() > 0
+        executed = images._jdf.queryExecution().executedPlan().toString()
+        assert 'min_by(content' not in executed, executed
+
+
 class TestMainContentPlan:
     def test_scan_pruned_to_url_html(self, spark, tmp_path_factory):
         """The main-content operator must read ONLY (url, html) from the
