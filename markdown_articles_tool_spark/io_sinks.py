@@ -12,10 +12,11 @@ Two implementations:
   → table ``stage_links``, partition columns ``pass``/``shard``),
   writes are atomic snapshot commits via the DataFrameWriterV2
   ``writeTo`` API (``overwritePartitions`` replaces exactly the
-  shard's partition — the idempotent-overwrite contract — and commit
-  markers become appends to a ``commits`` table, themselves atomic
-  snapshots).  ENV-GATED like the PIL decode path: there is no
-  Iceberg runtime in this container, so the constructor refuses to
+  partitions written, and a partitioned write's ``overwrite`` replaces
+  exactly the named shards' partitions — the idempotent-overwrite
+  contract — and commit markers become appends to a ``commits`` table,
+  themselves atomic snapshots).  ENV-GATED like the PIL decode path:
+  there is no Iceberg runtime in this container, so the constructor refuses to
   build unless a Spark catalog is actually configured
   (``spark.sql.catalog.<name>``); the class is the documented seam,
   exercised here only by its name-mapping unit tests
@@ -33,6 +34,7 @@ read-modify-write fold, because Iceberg gives serializable commits.
 from __future__ import annotations
 
 import os
+import shutil
 from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -57,6 +59,31 @@ def parse_table_name(name: str) -> Tuple[str, List[Tuple[str, Optional[str]]]]:
     return '_'.join(table_parts), parts
 
 
+def _literal(v: str):
+    return int(v) if v.lstrip('-').isdigit() else v
+
+
+def partitioned_write_spec(
+    name: str, col: str, values
+) -> Tuple[str, List[Tuple[str, object]], List[str], str]:
+    """Plan of a partitioned write of ``name`` whose frame carries the
+    partition column ``col`` (``TableSink.write_partitions``):
+    (table, the name's fixed partition literals, all partition columns,
+    the SQL condition selecting the replaced rows).
+
+    ``stage/pass=0/links`` by ``shard`` over shards 1 and 2 is table
+    ``stage_links`` partitioned by ``(pass, shard)``, replacing
+    ``pass = 0 AND shard IN (1, 2)``.
+    """
+    table, parts = parse_table_name(name)
+    if any(v is None for _, v in parts):
+        raise ValueError(f'cannot write to a wildcard partition: {name!r}')
+    fixed = [(k, _literal(v)) for k, v in parts]
+    cond = [f'`{k}` = {v!r}' for k, v in fixed]
+    cond.append(f"`{col}` IN ({', '.join(repr(v) for v in values)})")
+    return table, fixed, [k for k, _ in parts] + [col], ' AND '.join(cond)
+
+
 class TableSink:
     """Interface: named-table writes/reads + commit markers."""
 
@@ -65,6 +92,23 @@ class TableSink:
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         raise NotImplementedError
+
+    def write_partitions(self, df: DataFrame, name: str, col: str, values) -> None:
+        """Partitioned form of ``write``: ``df`` carries column ``col``,
+        and the partitions ``name/col=v`` for every ``v`` in ``values``
+        are replaced by its rows — a value without rows leaves an empty
+        partition, never a stale one.  This default makes one ``write``
+        per value, which is all a sink that knows only ``write`` can do;
+        the sinks below write the whole frame in one job."""
+        for v in values:
+            self.write(df.where(F.col(col) == v).drop(col), f'{name}/{col}={v}')
+
+    def read_partitions(self, spark: SparkSession, name: str, schema: str) -> DataFrame:
+        """Read a table written by ``write_partitions`` with its declared
+        DDL ``schema`` (partition column included).  The default
+        ``write_partitions`` leaves a file in every partition, so the
+        default read infers the schema."""
+        return self.read(spark, name)
 
     def mark_committed(self, marker: str) -> None:
         raise NotImplementedError
@@ -87,6 +131,20 @@ class ParquetMarkerSink(TableSink):
         # trailing k=v / k=* segments read back as discovered partition
         # columns — same columns the Iceberg sink would expose
         return spark.read.parquet(os.path.join(self.root, name))
+
+    def write_partitions(self, df: DataFrame, name: str, col: str, values) -> None:
+        # dynamic overwrite replaces only the partitions that get rows;
+        # removing the named ones first empties the rest
+        path = os.path.join(self.root, name)
+        for v in values:
+            shutil.rmtree(os.path.join(path, f'{col}={v}'), ignore_errors=True)
+        (df.write.mode('overwrite').option('partitionOverwriteMode', 'dynamic')
+         .partitionBy(col).parquet(path))
+
+    def read_partitions(self, spark: SparkSession, name: str, schema: str) -> DataFrame:
+        # a write whose partitions all got zero rows leaves no file to
+        # infer a schema from
+        return spark.read.schema(schema).parquet(os.path.join(self.root, name))
 
     def mark_committed(self, marker: str) -> None:
         # marker LAST: a crash before this leaves the unit uncommitted
@@ -121,7 +179,7 @@ class IcebergTableSink(TableSink):
         for k, v in parts:
             if v is None:
                 raise ValueError(f'cannot write to a wildcard partition: {name!r}')
-            df = df.withColumn(k, F.lit(int(v) if v.lstrip("-").isdigit() else v))
+            df = df.withColumn(k, F.lit(_literal(v)))
         full = self._full(table)
         writer = df.writeTo(full)
         if not self.spark.catalog.tableExists(full):
@@ -146,15 +204,28 @@ class IcebergTableSink(TableSink):
         df = spark.read.table(self._full(table))
         for k, v in parts:
             if v is not None:
-                df = df.where(F.col(k) == (int(v) if v.lstrip('-').isdigit() else v)).drop(k)
+                df = df.where(F.col(k) == _literal(v)).drop(k)
         return df
+
+    def write_partitions(self, df: DataFrame, name: str, col: str, values) -> None:
+        table, fixed, cols, cond = partitioned_write_spec(name, col, values)
+        for k, v in fixed:
+            df = df.withColumn(k, F.lit(v))
+        full = self._full(table)
+        writer = df.writeTo(full)
+        if not self.spark.catalog.tableExists(full):
+            writer.partitionedBy(*[F.col(k) for k in cols]).create()
+        else:
+            # overwrite-by-filter, not overwritePartitions: a named
+            # shard that got no rows must lose its stale ones too
+            writer.overwrite(F.expr(cond))
 
     def mark_committed(self, marker: str) -> None:
         df = self.spark.createDataFrame([(marker,)], 'marker string')
         full = self._full('commits')
         # append() requires an existing table — create on first marker;
-        # a concurrent creator (thread-pooled shards) loses the race
-        # benignly and falls through to append
+        # a concurrent creator (another run sharing the catalog) loses
+        # the race benignly and falls through to append
         if not self.spark.catalog.tableExists(full):
             try:
                 df.writeTo(full).create()

@@ -14,8 +14,9 @@ The package reads five environment settings, all deployment-shaped
 - ``SPARK_GRAFT_SHUFFLE_PARTITIONS``: ``spark.sql.shuffle.partitions``
   when the caller passes none (32).
 - ``SPARK_GRAFT_DRIVER_MEM``: ``spark.driver.memory`` (16g).
-- ``SPARK_GRAFT_SHARD_WORKERS``: concurrent shard jobs of
-  ``checkpoint.run_with_resume`` (4; read there).
+- ``SPARK_GRAFT_SHARD_WORKERS``: shards per phase-A wave of
+  ``checkpoint.run_with_resume`` (4; an integer >= 1, read and checked
+  there before any job).
 
 Every other config below is a constant; the comment beside it gives
 the measurement that chose it.

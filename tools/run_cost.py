@@ -10,8 +10,11 @@ Starts a ``session.get_spark`` session and runs ``--reps`` uninterrupted
 JSON line per run: SQL executions and jobs it started, Janino classes it
 compiled and their compile milliseconds, its wall time, and the CPU of
 the whole process tree (this process, the Spark JVM and the Python
-workers, read from ``/proc``).  The first run is the cold one; on a warm
-session a run should start 11 SQL executions and compile 0 classes.
+workers, read from ``/proc``).  The first run is the cold one.  Phase A
+runs in waves of ``SPARK_GRAFT_SHARD_WORKERS`` shards (4 by default), two
+SQL executions per wave, plus the docs and images writes: at 1 and 4
+shards a run should start 4 SQL executions (10 at 16 shards), and a warm
+run compile 0 classes.
 """
 
 from __future__ import annotations
