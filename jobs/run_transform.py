@@ -3,9 +3,13 @@
 
     spark-submit --py-files mats.zip jobs/run_transform.py \
         --input  s3://bucket/pages/          # or an Iceberg table path
-        --output s3://bucket/out/            \
+        --output /mnt/shared/out/            \
         --dedup content_hash --skip-all-errors \
         --shards 4096 --run-date 20260816 --run-time 000000
+
+With ``--shards`` the output must be a local or mounted directory: the
+commit markers and lineage rows are plain files (a URI is refused before
+any Spark job).  Without it any Spark-writable path works.
 
 Packaging: ``cd repo && zip -r mats.zip markdown_articles_tool_spark pyspark_graft_worker.py``
 (the Python worker entry; README "Session notes" says when it is used).

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass
 from typing import List, Optional
@@ -99,6 +100,15 @@ def _wave_size() -> int:
     return size
 
 
+def _check_local(out_dir: str) -> None:
+    """Commit markers and lineage rows are plain files written with
+    ``os`` calls; a URI output (``s3://...``) would leave them in a local
+    directory of that name while Spark writes the tables to the store."""
+    if re.match(r'[A-Za-z][A-Za-z0-9+.-]*://', out_dir):
+        raise ValueError(f'run_with_resume needs a local or mounted output directory for its '
+                         f'commit markers and lineage, got out_dir={out_dir!r}')
+
+
 def _write_lineage(out_dir: str, name: str, row: dict) -> None:
     p = os.path.join(out_dir, 'lineage')
     os.makedirs(p, exist_ok=True)
@@ -124,9 +134,11 @@ def run_with_resume(
 
     ``sink`` is the storage seam (io_sinks.TableSink): parquet dirs +
     commit markers by default; pass ``IcebergTableSink`` on a real
-    cluster for atomic snapshot commits (env-gated here — no Iceberg
-    runtime in this sandbox).
+    cluster for atomic snapshot commits (it needs an Iceberg catalog on
+    the session).  ``out_dir`` must be a local or mounted directory, not
+    a URI: the markers and lineage are plain files.
     """
+    _check_local(out_dir)
     wave_size = _wave_size()
     sink = sink or ParquetMarkerSink(out_dir)
     last = len(cfg.input_formats) - 1

@@ -13,7 +13,9 @@ The package reads five environment settings, all deployment-shaped
 - ``SPARK_GRAFT_CPUS``: local cores when no master is given (32).
 - ``SPARK_GRAFT_SHUFFLE_PARTITIONS``: ``spark.sql.shuffle.partitions``
   when the caller passes none (32).
-- ``SPARK_GRAFT_DRIVER_MEM``: ``spark.driver.memory`` (16g).
+- ``SPARK_GRAFT_DRIVER_MEM``: ``spark.driver.memory`` (a quarter of
+  the machine's physical memory, at least 1g and at most 16g; see
+  ``default_driver_memory``).
 - ``SPARK_GRAFT_SHARD_WORKERS``: shards per phase-A wave of
   ``checkpoint.run_with_resume`` (4; an integer >= 1, read and checked
   there before any job).
@@ -49,6 +51,24 @@ def worker_entry_path(master: str) -> str | None:
     if spec is None or not spec.has_location:
         return None
     return os.path.dirname(spec.origin)
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    a quarter of physical memory, clamped to [1g, 16g].
+
+    A fixed 16g heap on a 16 GB machine let the local-mode JVM (driver
+    and executors in one process) grow until the kernel's OOM killer
+    ended it; a quarter leaves the rest to the Python workers, the
+    page cache and the OS.  Where the page counts are unknown the
+    upper bound is used.
+    """
+    lo, hi = 1024, 16 * 1024
+    try:
+        total = os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES')
+    except (AttributeError, ValueError, OSError):
+        return f'{hi}m'
+    return f'{min(hi, max(lo, total // 4 // 2**20))}m'
 
 
 def get_spark(
@@ -87,7 +107,8 @@ def get_spark(
         # pipeline carries binary image content in several tables and an
         # over-eager broadcast of one of those kills the driver
         .config('spark.sql.autoBroadcastJoinThreshold', str(10 * 1024 * 1024))
-        .config('spark.driver.memory', os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g'))
+        .config('spark.driver.memory',
+                os.environ.get('SPARK_GRAFT_DRIVER_MEM') or default_driver_memory())
         # throughput collector: G1's concurrent phases compete with task
         # threads for cores on small executors (measured 25s → 14s on
         # the 8-core corpus transform); batch pipelines want ParallelGC

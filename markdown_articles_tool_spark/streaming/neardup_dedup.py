@@ -9,9 +9,9 @@ an intermediate table — Spark does not allow two
 ``applyInPandasWithState`` operators inside one query):
 
 * **Stage A — bucket registry** (`register_bands`): the page stream is
-  MinHash-signed (the batch UDF, identical constants) and exploded to
-  one row per band; ``groupBy(band, band_hash)`` keeps GroupState =
-  the first url that registered this bucket.  Every input row emits a
+  banded by ``training.dedup.minhash_bands`` (the batch candidates'
+  banding) to one row per band; ``groupBy(band, band_hash)`` keeps
+  GroupState = the first url that registered this bucket.  Every input row emits a
   verdict row ``(band, band_hash, url, is_first)`` — ``is_first`` only
   for the single registrant (min-url inside a batch, like the exact
   streaming dedup's first-writer-wins).
@@ -74,7 +74,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import corpus
-from ..training.dedup import jaccard_pairs, make_minhash_udf
+from ..training.dedup import jaccard_pairs, minhash_bands
 from . import append_parquet
 
 K = 64
@@ -92,19 +92,8 @@ _PARTNER_SEP = '\x1f'
 
 def band_rows(pages, k: int = K, bands: int = BANDS):
     """(band, band_hash, url) — one row per band of each page's MinHash
-    signature; identical banding to training.dedup.minhash_lsh_candidates
-    (xxhash64 over the comma-joined signature slice)."""
-    rows_per_band = k // bands
-    sig = pages.select('url', make_minhash_udf(k)(F.col('text')).alias('sig'))
-    return sig.select(
-        'url',
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(F.concat_ws(',', F.slice(F.col('sig'), b * rows_per_band + 1, rows_per_band))),
-            )
-        ).alias('band', 'band_hash'),
-    ).select('band', 'band_hash', 'url')
+    signature, from ``training.dedup.minhash_bands``."""
+    return minhash_bands(pages, 'url', k, bands).select('band', 'band_hash', 'url')
 
 
 def _register_fn(

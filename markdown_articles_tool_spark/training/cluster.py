@@ -41,11 +41,11 @@ from .util import LOCAL_MAX_EDGES, fits_one_task
 _CC_LOCAL_MAX_NODES = 500_000
 
 
-def _cc_partition(batches, max_iter: int, shortcut: bool):
+def _cc_partition(batches, max_iter: int):
     """Single-task twin of the distributed round loop below — the SAME
-    update rule per round (neighbor-min fold, optional pointer jump
-    through the PRE-round labels, left-join drop semantics for edge
-    endpoints outside the node set) so the fixpoint AND the
+    update rule per round (neighbor-min fold, pointer jump through the
+    PRE-round labels, left-join drop semantics for edge endpoints
+    outside the node set) so the fixpoint AND the
     round-count/convergence verdict are identical by construction
     (fuzz-pinned in tests/test_r07_optimizations.py).  Emits result
     rows with ``_nc = -1``; on non-convergence emits one sentinel row
@@ -86,10 +86,9 @@ def _cc_partition(batches, max_iter: int, shortcut: bool):
         for u, lab in labels.items():
             nl = nbr_min.get(u)
             cand = lab if nl is None or lab < nl else nl
-            if shortcut:
-                ptr = labels.get(cand)
-                if ptr is not None and ptr < cand:
-                    cand = ptr
+            ptr = labels.get(cand)
+            if ptr is not None and ptr < cand:
+                cand = ptr
             if cand != lab:
                 delta += 1
             new_labels[u] = cand
@@ -117,7 +116,6 @@ def connected_components(
     a_col: str = 'a_id',
     b_col: str = 'b_id',
     max_iter: int = 50,
-    shortcut: bool = True,
     local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(id_col, cluster_rep) for every node; cluster_rep = min id in the
@@ -125,8 +123,8 @@ def connected_components(
 
     Deterministic under any partitioning: the fixpoint of a min-fold is
     order-independent, and the pointer-shortcut hop only ever replaces
-    a label with a smaller label from the same component, so
-    ``shortcut`` changes the round count, never the fixpoint.
+    a label with a smaller label from the same component, so the hop
+    changes the round count, never the fixpoint.
 
     Raises ``RuntimeError`` if the propagation has not converged after
     ``max_iter`` rounds (with shortcutting that needs a component
@@ -163,7 +161,7 @@ def connected_components(
         ])
         res = (
             packed.repartition(1)
-            .mapInPandas(lambda it: _cc_partition(it, max_iter, shortcut),
+            .mapInPandas(lambda it: _cc_partition(it, max_iter),
                          out_schema)
             .localCheckpoint(eager=True)
         )
@@ -198,20 +196,19 @@ def connected_components(
                 F.least(F.col('label'), F.coalesce('nbr_label', 'label')).alias('label'),
             )
         )
-        if shortcut:
-            # pointer jump: label(v) := label(label(v)).  The invariant
-            # label(x) <= x holds throughout, so this only shrinks
-            # labels within the component — chains collapse in
-            # O(log d) rounds instead of O(d)
-            ptr = labels.select(F.col('u').alias('label'), F.col('label').alias('ptr_label'))
-            new_labels = (
-                new_labels.join(ptr, on='label', how='left')
-                .select(
-                    'u',
-                    'old_label',
-                    F.least(F.col('label'), F.coalesce('ptr_label', 'label')).alias('label'),
-                )
+        # pointer jump: label(v) := label(label(v)).  The invariant
+        # label(x) <= x holds throughout, so this only shrinks labels
+        # within the component — chains collapse in O(log d) rounds
+        # instead of O(d)
+        ptr = labels.select(F.col('u').alias('label'), F.col('label').alias('ptr_label'))
+        new_labels = (
+            new_labels.join(ptr, on='label', how='left')
+            .select(
+                'u',
+                'old_label',
+                F.least(F.col('label'), F.coalesce('ptr_label', 'label')).alias('label'),
             )
+        )
         # ONE expensive action per round: the checkpoint materializes
         # the joins; the convergence count below scans the cached
         # checkpoint (no recompute of the round's dataflow)

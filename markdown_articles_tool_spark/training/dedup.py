@@ -401,6 +401,21 @@ def make_minhash_udf(k: int = 64, shingle: int = 5):
 MAX_BUCKET = 512
 
 
+def minhash_bands(docs: DataFrame, id_col: str = 'doc_id', k: int = 64, bands: int = 16,
+                  shingle: int = 5) -> DataFrame:
+    """(id_col, band, band_hash): one row per band of each document's
+    MinHash signature over its ``text`` column — the banding spec that
+    the batch candidates and the streaming bucket registry
+    (``streaming.neardup_dedup.band_rows``) share.  ``band_hash`` is
+    xxhash64 over the comma-joined ``k // bands`` signature values of
+    the band."""
+    rows = k // bands
+    band_hashes = F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), lambda b: F.xxhash64(
+        F.concat_ws(',', F.slice(F.col('sig'), b * rows + 1, rows))))
+    return (docs.select(id_col, make_minhash_udf(k, shingle)(F.col('text')).alias('sig'))
+            .select(id_col, F.posexplode(band_hashes).alias('band', 'band_hash')))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = 'doc_id',
@@ -419,32 +434,12 @@ def minhash_lsh_candidates(
     accounting — run ``exact_dedup`` first; the quadratic in-bucket
     expansion must stay bounded (util.capped_buckets).
     """
-    from .util import capped_buckets, ensure_parallelism
+    from .util import bucket_pairs, ensure_parallelism
 
-    rows_per_band = k // bands
-    df = ensure_parallelism(df)
-    sigs = df.select(F.col(id_col).alias('doc_id'), make_minhash_udf(k, shingle)(F.col(text_col)).alias('sig'))
-    banded = sigs.select(
-        'doc_id',
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(F.concat_ws(',', F.slice(F.col('sig'), b * rows_per_band + 1, rows_per_band))),
-            )
-        ).alias('band', 'band_hash'),
-    )
-    # bucket-pairing: ONE groupBy builds each (band, band_hash) bucket
-    # and pairs expand from the bucket array in Column algebra — a
-    # band self-join consumed `banded` twice and re-ran the signature
-    # UDF per side (r4 plan audit); this shape evaluates it once and
-    # shuffles the narrow band rows once
-    return (
-        capped_buckets(banded, ['band', 'band_hash'], 'doc_id', max_bucket, 'minhash_lsh', observation)
-        .select(F.explode(_array_pairs(F.col('items'))).alias('p'))
-        .select('p.a_id', 'p.b_id')
-        .groupBy('a_id', 'b_id')
-        .agg(F.count(F.lit(1)).alias('n_bands_matched'))
-    )
+    docs = ensure_parallelism(df).select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('text'))
+    pairs = bucket_pairs(minhash_bands(docs, 'doc_id', k, bands, shingle), ['band', 'band_hash'],
+                         'doc_id', max_bucket, 'minhash_lsh', observation)
+    return pairs.withColumnRenamed('n_shared', 'n_bands_matched')
 
 
 def minhash_near_duplicates(
@@ -458,23 +453,6 @@ def minhash_near_duplicates(
     cand = minhash_lsh_candidates(df, id_col=id_col, text_col=text_col, **kw).select('a_id', 'b_id')
     verified = jaccard_pairs(df, cand, n=3, id_col=id_col, text_col=text_col)
     return verified.where(F.col('jaccard') >= threshold)
-
-
-def _array_pairs(docs):
-    """All (a_id, b_id) with a_id < b_id from an id array — pure Column
-    algebra (nested transform → flatten → filter), used by the bucket-
-    pairing dedup shapes so each sketch UDF is consumed exactly once."""
-    return F.filter(
-        F.flatten(
-            F.transform(
-                docs,
-                lambda a: F.transform(
-                    docs, lambda b: F.struct(a.alias('a_id'), b.alias('b_id'))
-                ),
-            )
-        ),
-        lambda p: p['a_id'] < p['b_id'],
-    )
 
 
 # ------------------------------------------------------------ winnowing
@@ -557,20 +535,14 @@ def winnow_duplicate_pairs(
     unbounded collect_list).  Returns (a_id, b_id, n_shared) with
     a_id < b_id.
     """
-    from .util import capped_buckets, ensure_parallelism
+    from .util import bucket_pairs, ensure_parallelism
 
     df = ensure_parallelism(df)
     fps = df.select(
         F.col(id_col).alias('doc_id'),
         F.explode(make_winnow_udf(k, w)(F.col(text_col))).alias('fp'),
     )
-    return (
-        capped_buckets(fps, ['fp'], 'doc_id', max_bucket, 'winnow', observation)
-        .select(F.explode(_array_pairs(F.col('items'))).alias('p'))
-        .select('p.a_id', 'p.b_id')
-        .groupBy('a_id', 'b_id')
-        .agg(F.count(F.lit(1)).alias('n_shared'))
-    )
+    return bucket_pairs(fps, ['fp'], 'doc_id', max_bucket, 'winnow', observation)
 
 
 # -------------------------------------------------------------- simhash
@@ -692,7 +664,7 @@ def simhash_near_duplicates(
     the 16-bit saturation already showing at 5k docs) drops degenerate
     buckets with observed-metric accounting.
     """
-    from .util import capped_buckets, ensure_parallelism
+    from .util import bucket_pairs, ensure_parallelism
 
     blks, subsets = simhash_band_specs(blocks, max_hamming)
 
@@ -711,32 +683,15 @@ def simhash_near_duplicates(
         F.struct(F.col('doc_id').alias('id'), F.col('simhash').alias('sh')).alias('rec'),
         F.posexplode(F.array(*[subset_key(s) for s in subsets])).alias('band', 'band_key'),
     )
-    # bucket-pairing (one consumption of the sketch UDF — the band
-    # self-join re-evaluated it per side, r4 plan audit); pair expansion
-    # carries (id, simhash) structs so Hamming verifies in-bucket
-    pairs = (
-        capped_buckets(banded, ['band', 'band_key'], 'rec', max_bucket, 'simhash', observation)
-        .select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            'items',
-                            lambda a: F.transform('items', lambda b: F.struct(a.alias('a'), b.alias('b'))),
-                        )
-                    ),
-                    lambda p: p['a']['id'] < p['b']['id'],
-                )
-            ).alias('p')
-        )
-        .select(
-            F.col('p.a.id').alias('a_id'),
-            F.col('p.b.id').alias('b_id'),
-            F.bit_count(F.col('p.a.sh').bitwiseXOR(F.col('p.b.sh'))).alias('hamming'),
-        )
-        .distinct()
+    # the pairs carry (id, simhash) structs so Hamming verifies in-bucket
+    pairs = bucket_pairs(banded, ['band', 'band_key'], 'rec', max_bucket, 'simhash', observation).select(
+        F.col('a_id.id').alias('a_id'),
+        F.col('b_id.id').alias('b_id'),
+        F.bit_count(F.col('a_id.sh').bitwiseXOR(F.col('b_id.sh'))).alias('hamming'),
     )
-    return pairs.where(F.col('hamming') <= max_hamming)
+    # structs order by id first; only a doc id listed twice with two
+    # texts pairs with itself, and that is no pair
+    return pairs.where((F.col('hamming') <= max_hamming) & (F.col('a_id') < F.col('b_id')))
 
 
 def make_span_hash_udf(k: int = 25):

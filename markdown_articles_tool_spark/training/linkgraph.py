@@ -25,9 +25,8 @@ Scale shapes
   shuffle), one groupBy dst, and one broadcast of two single-row
   aggregates (dangling mass, node count).  K iterations = K narrow
   shuffles over the HOST-sized table; the 10^12-row page table is
-  never touched again after ``host_edges``.  ``checkpoint_every``
-  truncates lineage with ``localCheckpoint`` for large K (at K≈10 the
-  linear plan growth is fine).
+  never touched again after ``host_edges``.  Every round's ranks are
+  materialized with ``localCheckpoint``, which also truncates lineage.
 
 Determinism (why integer fixed-point)
 -------------------------------------
@@ -138,7 +137,6 @@ def _pagerank_partition(batches, iterations: int):
 
 
 def pagerank_hosts(edges: DataFrame, iterations: int = 10,
-                   checkpoint_every: int = 1,
                    local_max_edges: int = LOCAL_MAX_EDGES) -> DataFrame:
     """(host, rank_units) after ``iterations`` integer power steps.
 
@@ -151,12 +149,12 @@ def pagerank_hosts(edges: DataFrame, iterations: int = 10,
     lineage so the plan stays flat at any K.  All the jobs run over the
     HOST-sized table, never the page table.
 
-    ``checkpoint_every`` > 1 batches rounds per checkpoint job; the r7
-    A/B at sf0.1 measured it a LOSS (every=1: 5.42 s, =2: 5.58 s,
-    =3: 6.42 s for the 10-iteration build): per-iteration cost is
-    STAGE execution, which batching does not reduce, while the lazy
-    window's 2^k subtree duplication adds planning work — so the
-    default stays 1.  What r7 did cut per iteration: the dangling-mass
+    Checkpointing only every few rounds was measured a LOSS in the r7
+    A/B at sf0.1 (every round: 5.42 s, every 2nd: 5.58 s, every 3rd:
+    6.42 s for the 10-iteration build): per-iteration cost is STAGE
+    execution, which batching does not reduce, while the lazy window's
+    2^k subtree duplication adds planning work.  What r7 did cut per
+    iteration: the dangling-mass
     semi-join (the dangling flag is precomputed ONCE onto the node
     frame and rides every checkpoint, so the mass is a plain filtered
     aggregation over the cached ranks — one join + one broadcast build
@@ -220,7 +218,7 @@ def pagerank_hosts(edges: DataFrame, iterations: int = 10,
     ranks = nodes_f.withColumn('rank_units', F.lit(base).cast('long'))
     ranks = ranks.localCheckpoint(eager=True)
 
-    for _it in range(iterations):
+    for _ in range(iterations):
         contribs = (
             edges_w.join(ranks, edges_w.src_host == ranks.host)
             .select(
@@ -249,10 +247,7 @@ def pagerank_hosts(edges: DataFrame, iterations: int = 10,
                 ).alias('rank_units'),
             )
         )
-        if (_it + 1) % max(1, int(checkpoint_every)) == 0 or _it == iterations - 1:
-            ranks = new_ranks.localCheckpoint(eager=True)
-        else:
-            ranks = new_ranks
+        ranks = new_ranks.localCheckpoint(eager=True)
 
     nodes.unpersist()
     edges_w.unpersist()

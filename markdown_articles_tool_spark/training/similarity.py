@@ -122,11 +122,16 @@ def _pack_band_keys(mat, n_planes: int, band_bits: int):
     return keys
 
 
-def make_signature_udf(n_planes: int, band_bits: int = 8):
-    """Random-hyperplane band keys as an Arrow-batched pandas UDF.
+def hyperplane_bands(emb: DataFrame, n_planes: int, band_bits: int = 8) -> DataFrame:
+    """(vec_id, band, band_key): one row per ``band_bits``-bit band of
+    each embedding's random-hyperplane signature, computed by one
+    Arrow-batched pandas UDF.
 
     ``dim`` is taken from the batch itself (the plane matrix is a
-    deterministic function of it) — no ``.head()`` driver job.
+    deterministic function of it) — no ``.head()`` driver job.  Only
+    the NARROW band rows leave: the embedding arrays never ride the
+    bucket exchange (×n_bands amplification); callers join them back
+    once per distinct candidate pair.
     """
 
     @pandas_udf(ArrayType(IntegerType()))
@@ -137,7 +142,7 @@ def make_signature_udf(n_planes: int, band_bits: int = 8):
         keys = _pack_band_keys(mat, n_planes, band_bits)
         return pd.Series([list(map(int, row)) for row in keys])
 
-    return sig_udf
+    return emb.select('vec_id', F.posexplode(sig_udf(F.col('embedding'))).alias('band', 'band_key'))
 
 
 def lsh_cosine_topk(
@@ -160,30 +165,17 @@ def lsh_cosine_topk(
     ``band_bits`` 16+ at ``n_planes`` 64+ — rather than lean on the
     cap (see the scale table on ``embedding_near_duplicates``).
     """
-    from .util import capped_buckets
+    from .util import bucket_neighbors
 
-    sig = make_signature_udf(n_planes)
-    # banding on NARROW columns — the embedding arrays never ride
-    # through the exploded band join (×n_bands amplification); they
-    # join back once per distinct candidate pair
-    signed = emb.select('vec_id', F.posexplode(sig(F.col('embedding'))).alias('band', 'band_key'))
-    # bucket-grouping: ONE signature-UDF evaluation (the old query-side
-    # join re-ran it over the whole table, r4 plan audit); bucket member
-    # arrays carry alongside the exploded query member, the tiny query
-    # set broadcast-filters, then neighbors explode from the same array
-    buckets = capped_buckets(
-        signed, ['band', 'band_key'], 'vec_id', max_bucket, 'lsh_topk', observation
-    ).withColumnRenamed('items', 'ids')
-    bucket_pairs = (
-        buckets.select(F.explode('ids').alias('query_id'), 'ids')
-        .join(F.broadcast(query_ids), 'query_id')
-        .select('query_id', F.explode('ids').alias('neighbor_id'))
-        .where(F.col('query_id') != F.col('neighbor_id'))
-        .distinct()
+    # ONE signature-UDF evaluation (the old query-side join re-ran it
+    # over the whole table, r4 plan audit)
+    cand = (
+        bucket_neighbors(hyperplane_bands(emb, n_planes), ['band', 'band_key'], 'vec_id',
+                         query_ids, max_bucket, 'lsh_topk', observation)
         .join(emb.selectExpr('vec_id as query_id', 'embedding as q_emb'), 'query_id')
         .join(emb.selectExpr('vec_id as neighbor_id', 'embedding as n_emb'), 'neighbor_id')
     )
-    scored = bucket_pairs.select(
+    scored = cand.select(
         'query_id',
         'neighbor_id',
         F.round(cosine(F.col('q_emb').cast('array<double>'), F.col('n_emb').cast('array<double>')), 9).alias('sim'),
@@ -340,28 +332,11 @@ def embedding_near_duplicates(
     masses (zero vectors, constant embeddings), not a substitute for
     sizing the keys; drops are logged as observed metrics.
     """
-    from .util import ensure_parallelism
+    from .util import bucket_pairs, ensure_parallelism
 
     emb = ensure_parallelism(emb)
-    sig = make_signature_udf(n_planes, band_bits)
-    # candidate generation on NARROW columns only — the wide embedding
-    # arrays never ride through the exploded band join (×n_bands
-    # amplification); they join back once per distinct candidate pair
-    banded = emb.select(
-        'vec_id', F.posexplode(sig(F.col('embedding'))).alias('band', 'band_key')
-    )
-    # bucket-pairing: one groupBy per bucket, pair expansion in Column
-    # algebra — the band self-join evaluated the signature UDF once per
-    # side (r4 plan audit); this consumes it exactly once
-    from .dedup import _array_pairs
-    from .util import capped_buckets
-
-    cand = (
-        capped_buckets(banded, ['band', 'band_key'], 'vec_id', max_bucket, 'emb_neardup', observation)
-        .select(F.explode(_array_pairs(F.col('items'))).alias('p'))
-        .select('p.a_id', 'p.b_id')
-        .distinct()
-    )
+    cand = bucket_pairs(hyperplane_bands(emb, n_planes, band_bits), ['band', 'band_key'], 'vec_id',
+                        max_bucket, 'emb_neardup', observation).select('a_id', 'b_id')
     cand = cand.join(emb.selectExpr('vec_id as a_id', 'embedding as a_emb'), 'a_id').join(
         emb.selectExpr('vec_id as b_id', 'embedding as b_emb'), 'b_id'
     )
@@ -480,22 +455,14 @@ def lsh_int8_topk(
     the scoring join pulls the quantized arrays.  Rank ties break by
     neighbor_id.
     """
-    from .util import capped_buckets
+    from .util import bucket_neighbors
 
-    sig = make_signature_udf(n_planes)
-    signed = emb.select('vec_id', F.posexplode(sig(F.col('embedding'))).alias('band', 'band_key'))
-    buckets = capped_buckets(
-        signed, ['band', 'band_key'], 'vec_id', max_bucket, 'int8_topk', observation
-    ).withColumnRenamed('items', 'ids')
     # the quantized vectors join as BOTH the query side and the
     # neighbor side — persist so the quantization Arrow pass runs once
     quant = int8_quantize(emb).select('vec_id', 'q').persist()
-    bucket_pairs = (
-        buckets.select(F.explode('ids').alias('query_id'), 'ids')
-        .join(F.broadcast(query_ids), 'query_id')
-        .select('query_id', F.explode('ids').alias('neighbor_id'))
-        .where(F.col('query_id') != F.col('neighbor_id'))
-        .distinct()
+    cand = (
+        bucket_neighbors(hyperplane_bands(emb, n_planes), ['band', 'band_key'], 'vec_id',
+                         query_ids, max_bucket, 'int8_topk', observation)
         .join(quant.selectExpr('vec_id as query_id', 'q as q_q'), 'query_id')
         .join(quant.selectExpr('vec_id as neighbor_id', 'q as n_q'), 'neighbor_id')
     )
@@ -503,7 +470,7 @@ def lsh_int8_topk(
         F.zip_with('q_q', 'n_q', lambda x, y: (x * y).cast('long')),
         F.lit(0).cast('long'), lambda acc, v: acc + v,
     )
-    scored = bucket_pairs.select('query_id', 'neighbor_id', dot.alias('dot'))
+    scored = cand.select('query_id', 'neighbor_id', dot.alias('dot'))
     w = Window.partitionBy('query_id').orderBy(F.col('dot').desc(), F.col('neighbor_id'))
     return (
         scored.withColumn('rank', F.row_number().over(w))

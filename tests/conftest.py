@@ -6,8 +6,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the suite's data is small; the package's 16g default heap lets the
-# JVM grow past a 16 GB machine's memory until the kernel kills it
+# the suite's data is small: one fixed heap keeps runs alike on any
+# machine (the package default is a quarter of physical memory, up to
+# 16g; see ``session.default_driver_memory``)
 os.environ.setdefault('SPARK_GRAFT_DRIVER_MEM', '4g')
 
 # the one session the suite shares (the ``spark`` fixture's value)

@@ -355,6 +355,21 @@ def test_wave_size_is_validated_before_any_job(spark, docs, tmp_path, monkeypatc
     assert not os.path.exists(tmp_path / 'out')
 
 
+@pytest.mark.parametrize('out', ['s3://bucket/out/', 'file:///tmp/out', 'hdfs://nn:8020/out'])
+def test_uri_output_is_refused_before_any_job(spark, docs, tmp_path, monkeypatch, out):
+    """Commit markers and lineage are plain files: a URI output would
+    leave them in a local directory named after it (``./s3:/bucket/...``)
+    while the lineage reader looks in the store."""
+    counters, delta = _run_counters()
+    monkeypatch.chdir(tmp_path)
+    c0 = counters(spark)
+    with pytest.raises(ValueError) as err:
+        run_with_resume(spark, docs, TransformConfig(), out, n_shards=4)
+    assert f'out_dir={out!r}' in str(err.value)
+    assert delta(c0, counters(spark))['jobs'] == 0
+    assert os.listdir(tmp_path) == []
+
+
 NO_LINK_DOCS = [(f'https://h{i}.example.com/a/{i}.md', f'# title {i}\n\nplain text, [a link](x.md)\n')
                 for i in range(6)]
 DEGENERATE_CASES = {

@@ -244,6 +244,25 @@ class TestExactDedupPlan:
             assert len(re.findall(r'ArrowEvalPython', plan_str)) <= 2, plan_str
             assert 'CartesianProduct' not in plan_str
 
+    def test_one_candidate_layer(self):
+        """The capped bucket step has one home: every banded operator
+        reaches ``capped_buckets`` through ``util.bucket_pairs`` or
+        ``util.bucket_neighbors``, and the per-module copies that once
+        expanded pairs or signatures on their own stay deleted."""
+        import pathlib
+
+        package = pathlib.Path(__file__).resolve().parent.parent / 'markdown_articles_tool_spark'
+        callers, gone = set(), []
+        for path in sorted(package.rglob('*.py')):
+            src = path.read_text()
+            rel = str(path.relative_to(package))
+            if re.search(r'\bcapped_buckets\(', src):
+                callers.add(rel)
+            gone += [(rel, name) for name in ('_array_pairs', 'make_signature_udf')
+                     if re.search(rf'\b{name}\b', src)]
+        assert callers == {'training/util.py'}, callers
+        assert gone == []
+
 
 class TestPdfExtractPlan:
     def test_pruned_scan_no_shuffle_and_kernel_match(self, spark, tmp_path_factory):

@@ -376,9 +376,11 @@ class TestConnectedComponentsSingleTaskFastPath:
         # no pairs over a non-empty node set: every node is a singleton
         graphs.append(([], [3, 1, 2]))
         for pairs_rows, node_rows in graphs:
-            for sc in (True, False):
-                fast = self._run(spark, pairs_rows, node_rows, shortcut=sc)
-                slow = self._run(spark, pairs_rows, node_rows, shortcut=sc,
+            # max_iter=1 is too small for any graph with an edge inside
+            # the node set: both paths must raise alike
+            for kw in ({}, {'max_iter': 1}):
+                fast = self._run(spark, pairs_rows, node_rows, **kw)
+                slow = self._run(spark, pairs_rows, node_rows, **kw,
                                  local_max_edges=0)
                 assert fast == slow
         assert fast == ('ok', {(1, 1), (2, 2), (3, 3)})
@@ -408,12 +410,12 @@ class TestConnectedComponentsSingleTaskFastPath:
     def test_convergence_verdict_parity_on_chain(self, spark):
         chain = [(i, i + 1) for i in range(40)]
         nodes = list(range(41))
-        # round-count-sensitive regime: at max_iter=14 the shortcut
-        # loop converges, the plain loop must still raise — in BOTH
-        # execution paths
-        for sc, verdict in ((True, 'ok'), (False, 'raise')):
-            fast = self._run(spark, chain, nodes, max_iter=14, shortcut=sc)
-            slow = self._run(spark, chain, nodes, max_iter=14, shortcut=sc,
+        # round-count-sensitive regime: the 40-hop chain converges in
+        # exactly 7 rounds, so max_iter=7 converges and max_iter=6 must
+        # raise — in BOTH execution paths
+        for max_iter, verdict in ((7, 'ok'), (6, 'raise')):
+            fast = self._run(spark, chain, nodes, max_iter=max_iter)
+            slow = self._run(spark, chain, nodes, max_iter=max_iter,
                              local_max_edges=0)
             assert fast[0] == verdict and slow[0] == verdict
             assert fast == slow

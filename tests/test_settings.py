@@ -62,3 +62,34 @@ e = os.environ.get(name)
 '''
     got = env_reads(ast.parse(src))
     assert got == {'A', 'B', 'C', 'D', '<computed: name>'}
+
+
+def _patched_sysconf(monkeypatch, total_bytes):
+    import os
+
+    page = 4096
+    names = {'SC_PAGE_SIZE': page, 'SC_PHYS_PAGES': total_bytes // page}
+    monkeypatch.setattr(os, 'sysconf', lambda name: names[name])
+
+
+def test_driver_memory_default_is_a_quarter_of_the_machine(monkeypatch):
+    from markdown_articles_tool_spark.session import default_driver_memory
+
+    gib = 2**30
+    for total, want in ((16 * gib, '4096m'), (6 * gib, '1536m'),
+                        (2 * gib, '1024m'), (256 * gib, '16384m'),
+                        (64 * gib, '16384m')):
+        _patched_sysconf(monkeypatch, total)
+        assert default_driver_memory() == want, total
+
+
+def test_driver_memory_default_without_page_counts(monkeypatch):
+    import os
+
+    from markdown_articles_tool_spark.session import default_driver_memory
+
+    def unknown(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(os, 'sysconf', unknown)
+    assert default_driver_memory() == '16384m'

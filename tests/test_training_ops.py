@@ -164,6 +164,14 @@ class TestSimhash:
         assert res.get((100, 102)) == 0
         assert res.get((200, 201)) == 0
 
+    def test_duplicate_id_never_pairs_with_itself(self, spark):
+        # the two texts of id 1 are 2 bits apart, so they share buckets
+        base = ' '.join(f'word{i}' for i in range(200))
+        df = spark.createDataFrame([(1, base), (1, base + ' extra0'), (2, base)],
+                                   'doc_id long, text string')
+        got = sorted(tuple(r) for r in dedup.simhash_near_duplicates(df).collect())
+        assert got == [(1, 2, 0), (1, 2, 2)]
+
 
 class TestLshRecall:
     def test_lsh_matches_brute_force_top1(self, spark):
@@ -255,10 +263,10 @@ class TestDedupClusters:
 
     def test_long_chain_shortcut_logarithmic(self, spark):
         """A 300-hop path graph: plain min-label propagation needs ~300
-        rounds; the pointer-shortcut variant must resolve it well within
-        a logarithmic budget (2**14 >> 300), and plain propagation with
-        the same tight budget must raise instead of silently returning
-        wrong labels."""
+        rounds; the pointer-shortcut loop must resolve it well within a
+        logarithmic budget (2**14 >> 300, it needs 10), and a budget too
+        small to converge must raise instead of silently returning wrong
+        labels."""
         import pytest
 
         from markdown_articles_tool_spark.training.cluster import connected_components
@@ -266,10 +274,10 @@ class TestDedupClusters:
         n = 300
         pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], 'a_id long, b_id long')
         nodes = spark.createDataFrame([(i,) for i in range(n + 1)], 'doc_id long')
-        reps = connected_components(pairs, nodes, max_iter=14, shortcut=True).collect()
+        reps = connected_components(pairs, nodes, max_iter=14).collect()
         assert {r['cluster_rep'] for r in reps} == {0} and len(reps) == n + 1
         with pytest.raises(RuntimeError, match='did not converge'):
-            connected_components(pairs, nodes, max_iter=14, shortcut=False)
+            connected_components(pairs, nodes, max_iter=4)
 
     def test_custom_column_names(self, spark):
         """id_col/text_col thread through the whole candidate → verify →
@@ -406,6 +414,7 @@ class TestBucketCaps:
         assert similarity.embedding_near_duplicates(emb, max_bucket=512).count() == 0
         queries = spark.range(3).select(F.col('id').alias('query_id'))
         assert similarity.lsh_cosine_topk(emb, queries, max_bucket=512).count() == 0
+        assert similarity.lsh_int8_topk(emb, queries, max_bucket=512).count() == 0
 
     def test_drop_metrics_observed(self, spark, docs):
         # mixed corpus: the three BASE*3 near-dups form hot buckets at
@@ -435,6 +444,43 @@ class TestBucketCaps:
         a = {(r['a_id'], r['b_id']) for r in dedup.minhash_lsh_candidates(docs).collect()}
         b = {(r['a_id'], r['b_id']) for r in dedup.minhash_lsh_candidates(docs, max_bucket=10**9).collect()}
         assert a == b and a
+
+
+class TestCandidateLayer:
+    """The shared banded candidate step (``util.bucket_pairs`` /
+    ``bucket_neighbors``, ``dedup.minhash_bands``)."""
+
+    def test_streaming_bands_equal_batch_bands(self, spark, docs):
+        """The streaming bucket registry bands a static pages frame into
+        the same rows as the batch candidates, and the batch candidates
+        equal a plain band self-join over those rows (every planted
+        bucket holds fewer than the cap)."""
+        from markdown_articles_tool_spark.streaming.neardup_dedup import band_rows
+
+        pages = docs.select(F.concat(F.lit('u'), F.col('doc_id')).alias('url'), 'text')
+        stream = sorted(tuple(r) for r in band_rows(pages).select('url', 'band', 'band_hash').collect())
+        batch = sorted(tuple(r) for r in dedup.minhash_bands(pages, 'url').collect())
+        assert stream == batch and len(stream) == 16 * docs.count()
+
+        rows = band_rows(pages)
+        joined = (
+            rows.alias('a').join(rows.alias('b'), ['band', 'band_hash'])
+            .where(F.col('a.url') < F.col('b.url'))
+            .groupBy(F.col('a.url').alias('a_id'), F.col('b.url').alias('b_id')).count()
+        )
+        want = sorted(tuple(r) for r in joined.collect())
+        got = sorted(tuple(r) for r in dedup.minhash_lsh_candidates(pages, id_col='url').collect())
+        assert got == want and got
+
+    def test_empty_keyed_table(self, spark):
+        from markdown_articles_tool_spark.training.util import bucket_neighbors, bucket_pairs
+
+        keyed = spark.createDataFrame([], 'band int, band_key int, vec_id long')
+        queries = spark.createDataFrame([(1,)], 'query_id long')
+        pairs = bucket_pairs(keyed, ['band', 'band_key'], 'vec_id', 8, 'empty')
+        nbrs = bucket_neighbors(keyed, ['band', 'band_key'], 'vec_id', queries, 8, 'empty')
+        assert pairs.columns == ['a_id', 'b_id', 'n_shared'] and pairs.collect() == []
+        assert nbrs.columns == ['query_id', 'neighbor_id'] and nbrs.collect() == []
 
 
 class TestSimhashBanding:
